@@ -249,14 +249,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = Session.builder(cpus.toInt)
       // shuffle/spill codec, env-parameterized (guide §2.3/§9: zstd
       // trades CPU for ratio — a deployment knob to measure per
       // cluster, not a universal answer; local default stays Spark's
@@ -267,7 +260,6 @@ object Bench {
       // CPU, decides — see OPTIMIZATION_r17.md)
       .config("spark.io.compression.codec",
         sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.io.Sources.schemaManifest(spark, sfDir).foreach(println)

@@ -46,17 +46,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("print")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the registry includes custom-operator queries (GroupTopK):
-      // without the extension their logical plans have no strategy
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = Session.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val lines = auditLines(spark)
     spark.stop()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for named registry queries — the
   * optimization-round evidence surface (plans/r16/<query>_{before,after}.txt).
@@ -26,16 +25,7 @@ object PlanDump {
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = Session.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val picked = SparkEntry.registry.sortBy(_.name)
       .filter(q => names.exists(q.name.startsWith))

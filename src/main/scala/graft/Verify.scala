@@ -7,18 +7,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false") // lenient casts (SURVEY.md §7.4.3)
-      // events.ts is TIMESTAMP(NANOS) parquet, which Spark 4 refuses by
-      // default; read it as a long of nanoseconds (SURVEY.md §7.4.6)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = Session.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.io.Sources.schemaManifest(spark, sfDir).foreach(println)
     // dev knob (same as Bench): SPARK_GRAFT_ONLY=d11,r2 verifies only
@@ -52,14 +41,8 @@ object Verify {
     // start from an EMPTY output dir: results of queries that no longer
     // exist (renames, removals) — or of a run that died before this one
     // compiled — must not leak into the compare as phantom passes
-    val out = new java.io.File(outDir)
-    if (out.exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(out)
-    }
-    out.mkdirs()
+    graft.io.Publish.deleteTree(outDir)
+    new java.io.File(outDir).mkdirs()
     SparkEntry.registry.sortBy(_.name)
       .filter(q => only.forall(_.exists(q.name.startsWith)))
       .foreach { q =>
@@ -73,13 +56,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a stale result dir from an earlier run must not mask the
         // failure as a pass in the downstream compare
-        val stale = new java.io.File(s"$outDir/$name")
-        if (stale.exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(stale)
-        }
+        graft.io.Publish.deleteTree(s"$outDir/$name")
       }
       // drop blocks persisted inside the query (LSH signatures, IVF
       // assignments) so 70+ queries don't accumulate cached partitions;

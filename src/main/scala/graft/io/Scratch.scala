@@ -95,11 +95,14 @@ object Scratch {
             d.getName != runId &&
             !ProcessHandle.of(pid.toLong).map[Boolean](_.isAlive)
               .orElse(false) =>
-          rmTree(d)
+          // best effort: a tree that cannot be removed now is left for
+          // the next sweep rather than failing this run's scratch setup
+          try Publish.deleteTree(d.getPath)
+          catch { case _: java.io.IOException => () }
         case _ => ()
       }
     })
-    Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(new java.io.File(p))))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => Publish.deleteTree(p)))
     p
   }
 
@@ -108,10 +111,4 @@ object Scratch {
     */
   def runRoot(kind: String, dir: String, leaf: String): String =
     s"$runBase/$kind/${sfTag(dir)}/$leaf"
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete()
-    ()
-  }
 }

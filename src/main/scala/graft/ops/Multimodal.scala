@@ -75,12 +75,11 @@ object Multimodal {
     val out = s"$mediaFixtureRoot/media_$sfName"
     val fp = graft.io.DerivedCache.fingerprint(dir, Seq("documents"))
     if (!graft.io.DerivedCache.isFresh(out, s"$out/_DONE", fp)) {
-      Files.createDirectories(Paths.get(out))
       // a stale rebuild must CLEAR the directory first: leftover
       // media_<id>.bin files from the old fixture would survive the
       // overwrite (ids change) and leak into the binaryFile glob
-      Option(new java.io.File(out).listFiles()).getOrElse(Array.empty)
-        .foreach(f => Files.deleteIfExists(f.toPath))
+      graft.io.Publish.deleteTree(out)
+      Files.createDirectories(Paths.get(out))
       Sources.table(spark, dir, "documents")
         .filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.Sources
+import graft.io.{Publish, Sources}
 import graft.stream.Pipelines
 
 /** Streaming pipelines under the driver's hard correctness signal:
@@ -42,18 +42,11 @@ object StreamQueries {
     * is keyed by this JVM's pid + start time), so no concurrent
     * Verify/Bench process can ever touch a running query's state —
     * the collision mechanism behind round 10's one-off qs4 hash miss.
-    * The `wipe` at each query's start still matters WITHIN a process:
+    * The delete at each query's start still matters WITHIN a process:
     * Bench with REPS>1 re-executes `fn` in the same JVM.
     */
   private def scratch(dir: String, qname: String): String =
     graft.io.Scratch.runRoot("stream", dir, qname)
-
-  private def wipe(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(new java.io.File(path))
-  }
 
   /** An isolated session whose shuffle width sizes the STATEFUL
     * operator's state-store count. A streaming stateful op opens one or
@@ -119,7 +112,7 @@ object StreamQueries {
       "through a checkpointed parquet sink (oracle mirrors the final " +
       "watermark's append-mode flush)") { (spark, dir) =>
     val root = scratch(dir, "qs1")
-    wipe(root)
+    Publish.deleteTree(root)
     // windowed aggregation state: one store per shuffle partition —
     // right-size via the scoped session (see stateSession)
     val windowed = eventStream(stateSession(spark, 8), dir)
@@ -195,7 +188,7 @@ object StreamQueries {
       "projection oracle") { (spark, dir) =>
     val input = ensureEnvelopeInput(spark, dir)
     val root = scratch(dir, "qs2")
-    wipe(s"$root/sink"); wipe(s"$root/ckpt")
+    Publish.deleteTree(s"$root/sink"); Publish.deleteTree(s"$root/ckpt")
     val inner = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("event_id",
         org.apache.spark.sql.types.LongType),
@@ -257,7 +250,7 @@ object StreamQueries {
       "growing file source, one checkpoint - run 2 merges only the new " +
       "files; oracle mirrors last-write-wins across the two batches") { (spark, dir) =>
     val root = scratch(dir, "qs3")
-    wipe(root)
+    Publish.deleteTree(root)
     val ev = Sources.table(spark, dir, "events")
       .select(col("event_id"), col("user_id"), col("ts"),
         col("event_type"), col("value"))
@@ -315,7 +308,7 @@ object StreamQueries {
       "whole-table aggregate (additive decimal merge is " +
       "batching-invariant)") { (spark, dir) =>
     val root = scratch(dir, "qs4")
-    wipe(root)
+    Publish.deleteTree(root)
     val auditOn = sys.env.get("SPARK_GRAFT_QS4_AUDIT").contains("1")
     val audit = s"$root/audit"
     val ev = Sources.table(spark, dir, "events")
@@ -445,7 +438,7 @@ object StreamQueries {
       "upserts + tombstone deletes; oracle mirrors last-change-wins " +
       "with deleted keys absent") { (spark, dir) =>
     val root = scratch(dir, "qs5")
-    wipe(root)
+    Publish.deleteTree(root)
     val ev = Sources.table(spark, dir, "events")
       .select(col("event_id"), col("user_id"), col("ts"),
         col("event_type"), col("value"),
@@ -493,7 +486,7 @@ object StreamQueries {
       "through a checkpointed sink; oracle = covering-window batch twin " +
       "under the final-watermark flush") { (spark, dir) =>
     val root = scratch(dir, "qs6")
-    wipe(root)
+    Publish.deleteTree(root)
     val windowed = eventStream(stateSession(spark, 8), dir)
       .withColumn("event_ts", timestamp_micros(expr("ts div 1000")))
       .withWatermark("event_ts", "1 hour")
@@ -555,7 +548,7 @@ object StreamQueries {
       "through a checkpointed sink; oracle = gaps-and-islands with " +
       "Spark's strict-merge boundary under the final-watermark flush") { (spark, dir) =>
     val root = scratch(dir, "qs7")
-    wipe(root)
+    Publish.deleteTree(root)
     // the session-window agg is a stateful op: pin its state width
     // (see stateSession — merging-window state is keys, not partitions)
     val sessions = Pipelines.sessionCounts(
@@ -602,7 +595,7 @@ object StreamQueries {
       "to completion through a checkpointed sink; oracle = batch " +
       "interval join") { (spark, dir) =>
     val root = scratch(dir, "qs8")
-    wipe(root)
+    Publish.deleteTree(root)
     // a stream-stream join opens FOUR state stores per shuffle
     // partition (128 dirs at local[32] for a few thousand buffered
     // rows): build the whole plan from a width-8 scoped session
@@ -680,7 +673,7 @@ object StreamQueries {
       "watermark closes their window (state-eviction semantics); " +
       "oracle = batch join + watermark-gated NOT EXISTS") { (spark, dir) =>
     val root = scratch(dir, "qs11")
-    wipe(root)
+    Publish.deleteTree(root)
     // same stateful-width right-sizing as qs8, scoped via stateSession
     val s8 = stateSession(spark, 8)
     def side(etype: String, idAs: String, tsAs: String,
@@ -734,7 +727,7 @@ object StreamQueries {
       "between runs); oracle = flat per-user aggregate") { (spark, dir) =>
     import spark.implicits._
     val root = scratch(dir, "qs9")
-    wipe(root)
+    Publish.deleteTree(root)
     val ev = Sources.table(spark, dir, "events")
       .filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"),
@@ -801,7 +794,7 @@ object StreamQueries {
       "prefix-sum filter in (arrival-half, doc_id) order") { (spark, dir) =>
     import spark.implicits._
     val root = scratch(dir, "qs10")
-    wipe(root)
+    Publish.deleteTree(root)
     val docs = Sources.table(spark, dir, "documents")
       .select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"))
@@ -945,7 +938,7 @@ object StreamQueries {
       "signatures appended between runs (keep-first across batches); " +
       "oracle = two-phase batch screen") { (spark, dir) =>
     val root = scratch(dir, "qs12")
-    wipe(root)
+    Publish.deleteTree(root)
     val docs = Sources.table(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     val bucket = graft.api.Sampling.hashBucket(col("doc_id"))
@@ -1018,7 +1011,7 @@ object StreamQueries {
       "stored); oracle = the corpus's distinct chunk set, which any " +
       "re-store or drop would fail") { (spark, dir) =>
     val root = scratch(dir, "qs13")
-    wipe(root)
+    Publish.deleteTree(root)
     val media = Multimodal.mediaFromDocuments(spark, dir).toDF()
       .select(col("media_id"), col("payload"))
     media.filter(col("media_id") % 2 === 0)
@@ -1077,7 +1070,7 @@ object StreamQueries {
       "sink (short / low_score / accept + dead-letter audit); oracle " +
       "= the batch CASE routing over the mirrored score") { (spark, dir) =>
     val root = scratch(dir, "qs14")
-    wipe(root)
+    Publish.deleteTree(root)
     val docs = Sources.table(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     docs.filter(col("doc_id") % 2 === 0)
@@ -1162,7 +1155,7 @@ object StreamQueries {
       "hourly window aggregation per segment (decimal-routed money; " +
       "oracle mirrors the batch join + final watermark flush)") { (spark, dir) =>
     val root = scratch(dir, "qs15")
-    wipe(root)
+    Publish.deleteTree(root)
     val ss = stateSession(spark, 8)
     val dim = Sources.table(ss, dir, "customer")
       .select(col("c_custkey").as("cust_key"),
@@ -1208,7 +1201,7 @@ object StreamQueries {
       "fold; report = static reference histogram vs accumulated view " +
       "(oracle shared verbatim with batch s22)") { (spark, dir) =>
     val root = scratch(dir, "qs16")
-    wipe(root)
+    Publish.deleteTree(root)
     val e = Sources.table(spark, dir, "embeddings")
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
@@ -1283,7 +1276,7 @@ object StreamQueries {
       "two waves + an empty commit, top-3 per hour ranked at read " +
       "time on the stored view; oracle = flat whole-table hourly rank") { (spark, dir) =>
     val root = scratch(dir, "qs17")
-    wipe(root)
+    Publish.deleteTree(root)
     val ev = Sources.table(spark, dir, "events")
       .select(col("event_id"), col("event_type"), col("value"),
         (expr("ts div 3600000000000") * 3600L).as("hour_start"))
@@ -1363,7 +1356,7 @@ object StreamQueries {
       "prefix-max window in (half, event_id) order") { (spark, dir) =>
     import spark.implicits._
     val root = scratch(dir, "qs18")
-    wipe(root)
+    Publish.deleteTree(root)
     val ev = Sources.table(spark, dir, "events")
       .select(col("event_id"), col("event_type"),
         expr("ts div 1000").as("us"))
@@ -1417,7 +1410,7 @@ object StreamQueries {
       "exposed user); readout code + oracle shared verbatim with the " +
       "batch e35") { (spark, dir) =>
     val root = scratch(dir, "qs19")
-    wipe(root)
+    Publish.deleteTree(root)
     // 2024-01-16T00:00Z — splits every rung's one-month event span
     // roughly in half, keeping both waves non-trivial
     val boundaryUs = 1705363200000000L
@@ -1511,7 +1504,7 @@ object StreamQueries {
       "and overcount (oracle re-derives the sketch from the flat " +
       "table)") { (spark, dir) =>
     val root = scratch(dir, "qs20")
-    wipe(root)
+    Publish.deleteTree(root)
     val ev = Sources.table(spark, dir, "events")
       .select(col("event_id"), col("event_type"))
     ev.filter(col("event_id") % 2 === 0)
@@ -1578,7 +1571,7 @@ object StreamQueries {
       "histogram ranked at read time on the bounded view (oracle " +
       "shared verbatim with batch p10)") { (spark, dir) =>
     val root = scratch(dir, "qs21")
-    wipe(root)
+    Publish.deleteTree(root)
     val docs = Sources.table(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
     docs.filter(col("doc_id") % 2 === 0)
@@ -1674,7 +1667,7 @@ object StreamQueries {
       "registers (oracle recomputes the sketch from the flat table)") { (spark, dir) =>
     import spark.implicits._
     val root = scratch(dir, "qs22")
-    wipe(root)
+    Publish.deleteTree(root)
     val ev = Sources.table(spark, dir, "events")
       .select(col("event_id"), col("event_type"), col("user_id"))
     ev.filter(col("event_id") % 2 === 0)
@@ -1739,7 +1732,7 @@ object StreamQueries {
       "stored stage table, oracle shared verbatim with batch e08") { (spark, dir) =>
     import spark.implicits._
     val root = scratch(dir, "qs23")
-    wipe(root)
+    Publish.deleteTree(root)
     // 2024-01-16T00:00Z — the qs19 mid-span boundary
     val boundaryUs = 1705363200000000L
     val ev = Sources.table(spark, dir, "events")
@@ -1808,7 +1801,7 @@ object StreamQueries {
       "distinct edge set, oracle = the batch pair expansion") { (spark, dir) =>
     import spark.implicits._
     val root = scratch(dir, "qs24")
-    wipe(root)
+    Publish.deleteTree(root)
     val items = Sources.table(spark, dir, "lineitem")
       .select(col("l_orderkey").as("order_id"),
         col("l_partkey").as("part_id"), col("l_linenumber"))
@@ -1925,7 +1918,7 @@ object StreamQueries {
       "integer quantile rule (smallest bin with cum*100 >= q*n) — " +
       "percentile monitoring from bounded registers, no stream sort") { (spark, dir) =>
     val root = scratch(dir, "qs25")
-    wipe(root)
+    Publish.deleteTree(root)
     val ev = Sources.table(spark, dir, "events")
       .select(col("event_id"), col("event_type"), col("value"))
     ev.filter(col("event_id") % 2 === 0)
@@ -2072,7 +2065,7 @@ object StreamQueries {
       "shingle-set Jaccard (oracle re-derives the registers from the " +
       "flat table)") { (spark, dir) =>
     val root = scratch(dir, "qs26")
-    wipe(root)
+    Publish.deleteTree(root)
     val docs = Sources.table(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("text"))
     docs.filter(col("doc_id") % 2 === 0)
@@ -2250,7 +2243,7 @@ object StreamQueries {
       "run; read-time mirrored-IEEE mean and population std — " +
       "distribution monitoring from three BIGINT registers per key") { (spark, dir) =>
     val root = scratch(dir, "qs27")
-    wipe(root)
+    Publish.deleteTree(root)
     val ev = Sources.table(spark, dir, "events")
       .select(col("event_id"), col("event_type"), col("value"))
     ev.filter(col("event_id") % 2 === 0)
@@ -2367,7 +2360,7 @@ object StreamQueries {
       "mean + 3-sigma rule over the densified stored view — the " +
       "alerting readout of the incremental-view family") { (spark, dir) =>
     val root = scratch(dir, "qs28")
-    wipe(root)
+    Publish.deleteTree(root)
     val ev = Sources.table(spark, dir, "events")
       .select(col("event_id"), col("event_type"),
         expr("ts div 3600000000000").as("hr"))
@@ -2438,7 +2431,7 @@ object StreamQueries {
       "function over the stored state, oracle shared verbatim with " +
       "batch e45") { (spark, dir) =>
     val root = scratch(dir, "qs29")
-    wipe(root)
+    Publish.deleteTree(root)
     // 2024-01-16T00:00Z — the qs19/qs23 mid-span boundary
     val boundaryUs = 1705363200000000L
     val ev = Sources.table(spark, dir, "events")
@@ -2517,7 +2510,7 @@ object StreamQueries {
       "under the final watermark") { (spark, dir) =>
     import spark.implicits._
     val root = scratch(dir, "qs30")
-    wipe(root)
+    Publish.deleteTree(root)
     // 2024-01-16T00:00Z — the qs19/qs23/qs29 mid-span boundary
     val boundaryUs = 1705363200000000L
     val ev = Sources.table(spark, dir, "events")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQu
 import org.apache.spark.sql.Row
 
 import graft.clean.Cleaners
-import graft.io.Sources
+import graft.io.{Publish, Sources}
 import graft.model.Schemas
 
 /** Structured-Streaming pipelines mirroring the reference's Kinesis
@@ -164,6 +164,14 @@ object Pipelines {
     q.awaitTermination()
   }
 
+  /** True when `path` is a directory holding parquet part files. An
+    * existing-but-empty dir (fresh temp dir, wiped table) is a first
+    * write, not a merge target.
+    */
+  private def hasParts(path: String): Boolean =
+    Option(new java.io.File(path).listFiles())
+      .exists(_.exists(_.getName.startsWith("part-")))
+
   /** Streaming trending top-k: event-time windowed counts per key, with
     * each CLOSED window's top-k keys appended to a parquet table — the
     * "trending categories this hour" pipeline over an event stream.
@@ -240,10 +248,9 @@ object Pipelines {
     * r31 (a real event store is written by a stream, so its
     * data-skipping index must be too).
     *
-    * Atomic commit by staged rename (the [[upsertSink]] publish
-    * pattern): the batch's data files AND its `_zonemap/` stats are
-    * written to a SIBLING staging directory (`<table>.staged-batch-N`,
-    * outside the table path, so a concurrent reader never lists it),
+    * Atomic commit by [[graft.io.Publish]]: the batch's data files AND
+    * its `_zonemap/` stats are written to the hidden staging directory
+    * of `batch=<id>` (a concurrent reader of the table never lists it),
     * then one rename publishes `batch=<id>` with the stats inside it —
     * data and stats share a single visibility point, and a reader can
     * never observe fresh files with stale stats or vice versa. Stats
@@ -251,10 +258,7 @@ object Pipelines {
     * rename. The `_zonemap` subdirectory is invisible to plain
     * `spark.read.parquet(tablePath)` readers (the Hadoop hidden-file
     * convention for `_`-prefixed names); pruned readers find it via
-    * [[graft.io.ZoneMap.statsGlob]]. Same caveat as every
-    * publish-by-rename protocol: atomicity is the filesystem rename's
-    * (real on HDFS/POSIX; an object store needs its table-format
-    * commit instead).
+    * [[graft.io.ZoneMap.statsGlob]].
     *
     * Idempotence under redelivery: a replayed epoch re-stages and
     * re-publishes the same `batch=<id>` directory — rewrite, never
@@ -276,81 +280,24 @@ object Pipelines {
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
           val dataDir = s"$tablePath/batch=$batchId"
-          val staged = s"$tablePath.staged-batch-$batchId"
-          batch.repartitionByRange(filesPerBatch, col(tsCol))
-            .sortWithinPartitions(tsCol)
-            .write.mode("overwrite").parquet(staged)
-          graft.io.ZoneMap.stats(spark, staged, tsCol)
-            .withColumn("file",
-              // literal (non-regex) substring replace: staged path ->
-              // the path the file will have once the rename publishes
-              org.apache.spark.sql.functions.expr(
-                s"replace(file, '$staged', '$dataDir')"))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$staged/_zonemap")
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory)
-              Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-            f.delete(); ()
+          Publish(dataDir) { staged =>
+            batch.repartitionByRange(filesPerBatch, col(tsCol))
+              .sortWithinPartitions(tsCol)
+              .write.mode("overwrite").parquet(staged)
+            // the part files by glob: the dot-named staging dir itself
+            // is a hidden path that Spark warns about as a read root
+            graft.io.ZoneMap.stats(spark, s"$staged/*.parquet", tsCol)
+              .withColumn("file",
+                // literal (non-regex) substring replace: staged path ->
+                // the path the file will have once the rename publishes
+                org.apache.spark.sql.functions.expr(
+                  s"replace(file, '$staged', '$dataDir')"))
+              .coalesce(1)
+              .write.mode("overwrite").parquet(s"$staged/_zonemap")
           }
-          val target = new java.io.File(dataDir)
-          if (target.exists()) rm(target) // replay: drop the old epoch
-          new java.io.File(tablePath).mkdirs()
-          if (!new java.io.File(staged).renameTo(target))
-            throw new java.io.IOException(
-              s"zoneMappedSink: commit rename failed for $dataDir")
         }
         ()
       }
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-    f.delete(); ()
-  }
-
-  /** Publish a staged rewrite of a cumulative table directory with NO
-    * window in which the live data is the only casualty: the live dir
-    * is renamed ASIDE (`<live>.old`), the staged dir renamed into
-    * place, and only then is the aside copy deleted. A crash at any
-    * point leaves either the old table (recoverable by
-    * [[recoverPublished]]) or the new one on disk — never neither.
-    * The naive order (delete live, then rename staged in) has a
-    * delete→rename window that destroys the table outright, which for
-    * a CUMULATIVE store (chunk store, aggregate view) is unrecoverable
-    * data loss: the checkpoint has already committed earlier batches,
-    * so their content is never redelivered.
-    */
-  private[graft] def publishStaged(livePath: String, label: String): Unit = {
-    val live = new java.io.File(livePath)
-    val aside = new java.io.File(livePath + ".old")
-    rmTree(aside) // debris from a crash after a previous publish
-    if (live.exists() && !live.renameTo(aside))
-      throw new java.io.IOException(
-        s"$label: aside rename failed for $livePath")
-    if (!new java.io.File(livePath + ".staged").renameTo(live)) {
-      // put the previous table back before failing — the staged dir is
-      // from an uncommitted batch and will be rebuilt on replay
-      aside.renameTo(live)
-      throw new java.io.IOException(
-        s"$label: commit rename failed for $livePath")
-    }
-    rmTree(aside)
-  }
-
-  /** Crash recovery for [[publishStaged]], run before each batch reads
-    * the table: a live dir missing with the aside copy present means
-    * the crash hit between the two renames — restore the aside copy.
-    * (A crash after the commit rename leaves stale `.old` debris,
-    * which the next publish clears; live wins because it exists.)
-    */
-  private[graft] def recoverPublished(livePath: String, label: String): Unit = {
-    val live = new java.io.File(livePath)
-    val aside = new java.io.File(livePath + ".old")
-    if (!live.exists() && aside.exists() && !aside.renameTo(live))
-      throw new java.io.IOException(
-        s"$label: crash-recovery rename failed for $livePath")
-  }
 
   /** Streaming MERGE sink: every micro-batch is applied to a parquet
     * table as an upsert (`MERGE INTO` from a stream — the Delta
@@ -358,9 +305,9 @@ object Pipelines {
     * several updates for one key collapse to the latest by `orderCol`
     * BEFORE the merge ([[graft.api.Tables.upsert]] requires unique
     * update keys — at-least-once sources redeliver). The merged table
-    * is staged to a sibling dir and published by the two-rename swap
-    * ([[publishStaged]]), so a crash at ANY point — including between
-    * the renames — leaves a recoverable table on disk.
+    * is staged and published by [[graft.io.Publish]], so a crash at
+    * ANY point — including between its two renames — leaves a
+    * recoverable table on disk.
     *
     * At scale the read-merge-rewrite becomes a real table format's
     * MERGE (Delta/Iceberg) — this sink IS that call site: swap the
@@ -411,18 +358,12 @@ object Pipelines {
       val latest = batch
         .withColumn("_graft_rn", row_number().over(w))
         .filter(col("_graft_rn") === 1).drop("_graft_rn")
-      recoverPublished(tablePath, "upsertSink")
-      val table = new java.io.File(tablePath)
-      // an existing-but-empty dir (fresh temp dir, wiped table) is a
-      // first write, not a merge target
-      val hasData = table.isDirectory && Option(table.listFiles())
-        .exists(_.exists(_.getName.startsWith("part-")))
+      Publish.recover(tablePath)
       val merged =
-        if (hasData)
+        if (hasParts(tablePath))
           graft.api.Tables.upsert(spark.read.parquet(tablePath), latest, key)
         else latest
-      merged.write.mode("overwrite").parquet(tablePath + ".staged")
-      publishStaged(tablePath, "upsertSink")
+      Publish(tablePath)(merged.write.mode("overwrite").parquet(_))
       ()
     }
 
@@ -464,12 +405,9 @@ object Pipelines {
           .groupBy("user_id").agg(min(col("us")).as("wv"))
         val waveP = b.filter(col("event_type") === "purchase")
           .select(col("user_id"), col("us").as("pus"))
-        recoverPublished(tablePath, "abExposureSink")
-        val table = new java.io.File(tablePath)
-        val hasData = table.isDirectory && Option(table.listFiles())
-          .exists(_.exists(_.getName.startsWith("part-")))
+        Publish.recover(tablePath)
         val old =
-          if (hasData) spark.read.parquet(tablePath)
+          if (hasParts(tablePath)) spark.read.parquet(tablePath)
           else spark.createDataFrame(
             new java.util.ArrayList[Row](),
             org.apache.spark.sql.types.StructType(Seq(
@@ -495,9 +433,8 @@ object Pipelines {
         val merged = exposed.join(qual, Seq("user_id"), "left")
           .select(col("user_id"), col("v_us"),
             greatest(col("conv"), coalesce(col("q"), lit(0L))).as("conv"))
-        merged.write.mode("overwrite").parquet(tablePath + ".staged")
+        Publish(tablePath)(merged.write.mode("overwrite").parquet(_))
         b.unpersist()
-        publishStaged(tablePath, "abExposureSink")
         ()
       }
 
@@ -534,12 +471,9 @@ object Pipelines {
           .groupBy("user_id").agg(min(col("us")).as("wv"))
         val waveP = b.filter(col("event_type") === "purchase")
           .select(col("user_id"), col("us").as("pus"))
-        recoverPublished(tablePath, "gstStateSink")
-        val table = new java.io.File(tablePath)
-        val hasData = table.isDirectory && Option(table.listFiles())
-          .exists(_.exists(_.getName.startsWith("part-")))
+        Publish.recover(tablePath)
         val old =
-          if (hasData) spark.read.parquet(tablePath)
+          if (hasParts(tablePath)) spark.read.parquet(tablePath)
           else spark.createDataFrame(
             new java.util.ArrayList[Row](),
             org.apache.spark.sql.types.StructType(Seq(
@@ -565,9 +499,8 @@ object Pipelines {
           .select(col("user_id"), col("v_us"),
             coalesce(least(col("conv_us"), col("q_us")),
               col("conv_us"), col("q_us")).as("conv_us"))
-        merged.write.mode("overwrite").parquet(tablePath + ".staged")
+        Publish(tablePath)(merged.write.mode("overwrite").parquet(_))
         b.unpersist()
-        publishStaged(tablePath, "gstStateSink")
         ()
       }
 
@@ -577,7 +510,7 @@ object Pipelines {
     * anti-joined against the accumulated store on the chunk md5, and
     * only NOVEL chunks are admitted — so storage grows by content the
     * lake has never seen, no matter how often payloads repeat across
-    * batches. Published by the two-rename swap ([[publishStaged]] —
+    * batches. Published by [[graft.io.Publish]] (its two-rename swap —
     * the cumulative store is the case where the naive delete+rename
     * window is outright data loss, since committed batches are never
     * redelivered), and idempotent under replay by construction: a
@@ -595,18 +528,14 @@ object Pipelines {
         val spark = batch.sparkSession
         val novel = graft.ops.Multimodal.payloadChunks(batch.toDF(), chunkBytes)
           .select("h", "len").dropDuplicates("h")
-        recoverPublished(storePath, "chunkStoreSink")
-        val store = new java.io.File(storePath)
-        val hasData = store.isDirectory && Option(store.listFiles())
-          .exists(_.exists(_.getName.startsWith("part-")))
+        Publish.recover(storePath)
         val merged =
-          if (hasData) {
+          if (hasParts(storePath)) {
             val existing = spark.read.parquet(storePath)
             existing.unionByName(
               novel.join(existing.select(col("h")), Seq("h"), "left_anti"))
           } else novel
-        merged.write.mode("overwrite").parquet(storePath + ".staged")
-        publishStaged(storePath, "chunkStoreSink")
+        Publish(storePath)(merged.write.mode("overwrite").parquet(_))
         ()
       }
   }
@@ -664,10 +593,7 @@ object Pipelines {
         // the per-run delta
         def indexSide(sub: String): DataFrame = {
           val base = spark.read.parquet(s"$corpusIndexPath/$sub")
-          val d = new java.io.File(s"$deltaIndexPath/$sub")
-          val hasDelta = d.isDirectory && Option(d.listFiles())
-            .exists(_.exists(_.getName.startsWith("part-")))
-          if (hasDelta)
+          if (hasParts(s"$deltaIndexPath/$sub"))
             base.unionByName(spark.read.parquet(s"$deltaIndexPath/$sub"))
           else base
         }
@@ -766,7 +692,7 @@ object Pipelines {
     * to the latest change per key by `orderCol` (at-least-once sources
     * redeliver; a later delete beats an earlier update and vice
     * versa), and [[graft.api.Tables.applyCdc]] merges it into the
-    * parquet table — published by the same staged-swap rename, so a
+    * parquet table — published by [[graft.io.Publish]], so a
     * crash mid-write leaves the previous table intact. The table holds
     * the data columns only; op/order are consumed by the merge. On
     * Delta/Iceberg this body becomes `MERGE ... WHEN MATCHED AND
@@ -791,17 +717,13 @@ object Pipelines {
           .withColumn("_graft_rn", row_number().over(w))
           .filter(col("_graft_rn") === 1)
           .drop("_graft_rn", orderCol)
-        recoverPublished(tablePath, "cdcSink")
-        val table = new java.io.File(tablePath)
-        val hasData = table.isDirectory && Option(table.listFiles())
-          .exists(_.exists(_.getName.startsWith("part-")))
+        Publish.recover(tablePath)
         val merged =
-          if (hasData)
+          if (hasParts(tablePath))
             graft.api.Tables.applyCdc(spark.read.parquet(tablePath), latest,
               key, opCol)
           else latest.filter(col(opCol) =!= "D").drop(opCol)
-        merged.write.mode("overwrite").parquet(tablePath + ".staged")
-        publishStaged(tablePath, "cdcSink")
+        Publish(tablePath)(merged.write.mode("overwrite").parquet(_))
         ()
       }
   }
@@ -825,13 +747,7 @@ object Pipelines {
       spark: org.apache.spark.sql.SparkSession, tablePath: String,
       partial: DataFrame, viewKey: String, batchId: Long,
       auditDir: Option[String] = None): Unit = {
-    recoverPublished(tablePath, "aggViewSink")
-    val markFile = new java.io.File(tablePath, "_LAST_BATCH")
-    val lastApplied =
-      if (markFile.exists())
-        new String(java.nio.file.Files.readAllBytes(markFile.toPath),
-          "UTF-8").trim.toLong
-      else -1L
+    val lastApplied = lastAppliedBatch(tablePath)
     def trail(msg: String): Unit = auditDir.foreach { dir =>
       new java.io.File(dir).mkdirs()
       java.nio.file.Files.write(
@@ -856,11 +772,8 @@ object Pipelines {
       trail("action=folded")
       spark.read.parquet(p)
     }.getOrElse(partial)
-    val table = new java.io.File(tablePath)
-    val hasData = table.isDirectory && Option(table.listFiles())
-      .exists(_.exists(_.getName.startsWith("part-")))
     val merged =
-      if (hasData)
+      if (hasParts(tablePath))
         spark.read.parquet(tablePath).unionByName(foldInput)
           .groupBy(viewKey)
           .agg(sum("n_rows").as("n2"), sum("s").as("s2"))
@@ -870,17 +783,36 @@ object Pipelines {
             // on store so the view schema is a fixpoint
             col("s2").cast("decimal(18,2)").as("s"))
       else foldInput
-    val staged = tablePath + ".staged"
-    merged.write.mode("overwrite").parquet(staged)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(staged, "_LAST_BATCH"),
-      batchId.toString.getBytes("UTF-8"))
-    publishStaged(tablePath, "aggViewSink")
+    publishMarked(tablePath, merged, batchId)
     // (no per-batch view snapshot: the fold is a pure function of the
     // audited partials + the prior view, so partials + trail +
     // _LAST_BATCH reconstruct every intermediate state)
     ()
   }
+
+  /** The `_LAST_BATCH` high-water mark of a view table (-1 when there
+    * is none yet), read after recovering a crash between the publish
+    * renames.
+    */
+  private def lastAppliedBatch(tablePath: String): Long = {
+    Publish.recover(tablePath)
+    val mark = java.nio.file.Paths.get(tablePath, "_LAST_BATCH")
+    if (java.nio.file.Files.exists(mark))
+      java.nio.file.Files.readString(mark).trim.toLong
+    else -1L
+  }
+
+  /** Publish a view table with `batchId` as its `_LAST_BATCH` mark,
+    * written into the staged copy so data and mark move in one commit.
+    */
+  private def publishMarked(tablePath: String, merged: DataFrame,
+      batchId: Long): Unit =
+    Publish(tablePath) { staged =>
+      merged.write.mode("overwrite").parquet(staged)
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(staged, "_LAST_BATCH"), batchId.toString)
+      ()
+    }
 
   /** MIN-monoid view sink — [[aggViewSink]]'s fold machinery with a
     * min-merge: each micro-batch reduces to per-`viewKey` minima of
@@ -917,29 +849,15 @@ object Pipelines {
   private[graft] def applyMinViewBatch(
       spark: org.apache.spark.sql.SparkSession, tablePath: String,
       partial: DataFrame, viewKey: String, batchId: Long): Unit = {
-    recoverPublished(tablePath, "minViewSink")
-    val markFile = new java.io.File(tablePath, "_LAST_BATCH")
-    val lastApplied =
-      if (markFile.exists())
-        new String(java.nio.file.Files.readAllBytes(markFile.toPath),
-          "UTF-8").trim.toLong
-      else -1L
+    val lastApplied = lastAppliedBatch(tablePath)
     if (batchId <= lastApplied) return // replayed batch: already folded
-    val table = new java.io.File(tablePath)
-    val hasData = table.isDirectory && Option(table.listFiles())
-      .exists(_.exists(_.getName.startsWith("part-")))
     val merged =
-      if (hasData)
+      if (hasParts(tablePath))
         spark.read.parquet(tablePath).unionByName(partial)
           .groupBy(viewKey)
           .agg(min("register").cast("bigint").as("register"))
       else partial
-    val staged = tablePath + ".staged"
-    merged.write.mode("overwrite").parquet(staged)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(staged, "_LAST_BATCH"),
-      batchId.toString.getBytes("UTF-8"))
-    publishStaged(tablePath, "minViewSink")
+    publishMarked(tablePath, merged, batchId)
     ()
   }
 
@@ -1772,14 +1690,21 @@ object Pipelines {
     * accumulated table, so the delta only ever prices genuinely new
     * edges — the per-batch cost is proportional to the batch's edge
     * count times the old graph's relevant degrees, never to the
-    * accumulated graph size. Both artifacts publish by staged-swap
-    * rename (the [[upsertSink]] contract: crash mid-write leaves the
-    * previous state intact; on Delta/Iceberg this becomes the table
-    * format's commit).
+    * accumulated graph size.
     *
-    * The count table at `countPath` holds one row (n_edges BIGINT,
-    * n_triangles BIGINT) and must stay consistent with `tablePath`; a
-    * production deployment folds both into one transactional commit.
+    * Exactly-once under crash and replay, with two artifacts published
+    * one at a time by [[graft.io.Publish]] (each crash-safe on its own):
+    * the count table at `countPath` holds one row (n_edges BIGINT,
+    * n_triangles BIGINT, batch_id BIGINT) — the totals and the id of
+    * the last batch folded into them — and publishes FIRST; the edge
+    * table at `tablePath` publishes second. A replayed batch that finds
+    * its own (or a later) `batch_id` in the count row has already been
+    * counted, so it only re-publishes the edge table as the pre-batch
+    * edges plus the batch's new ones: a no-op if the first attempt got
+    * that far, the missing half if it crashed between the two
+    * publishes. Otherwise it counts against the edge table on disk,
+    * which is then still the pre-batch table. Either way the totals
+    * equal [[graft.api.Graph.triangleStats]] over the edge table.
     */
   def trianglesSink(edges: org.apache.spark.sql.Dataset[CoEdge],
       tablePath: String, countPath: String, checkpoint: String)
@@ -1788,72 +1713,58 @@ object Pipelines {
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[CoEdge], _: Long) =>
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[CoEdge], batchId: Long) =>
         val spark = batch.sparkSession
         import spark.implicits._
+        Publish.recover(countPath)
+        Publish.recover(tablePath)
         val canon = batch.toDF()
           .select(least(col("pa"), col("pb")).as("pa"),
             greatest(col("pa"), col("pb")).as("pb"))
           .filter(col("pa") =!= col("pb")).distinct()
-        val table = new java.io.File(tablePath)
-        val hasData = table.isDirectory && Option(table.listFiles())
-          .exists(_.exists(_.getName.startsWith("part-")))
         val old =
-          if (hasData) spark.read.parquet(tablePath)
+          if (hasParts(tablePath)) spark.read.parquet(tablePath)
           else Seq.empty[(Long, Long)].toDF("pa", "pb")
-        val eNew = canon.join(old, Seq("pa", "pb"), "left_anti").persist()
-        val oldBi = old.select(col("pa").as("u"), col("pb").as("v"))
-          .unionAll(old.select(col("pb").as("u"), col("pa").as("v")))
-        val newBi = eNew.select(col("pa").as("u"), col("pb").as("v"))
-          .unionAll(eNew.select(col("pb").as("u"), col("pa").as("v")))
-        // 1 new edge: common OLD neighbors of each new edge's endpoints
-        val t1 = eNew
-          .join(oldBi.select(col("u").as("pa"), col("v").as("w1")), "pa")
-          .join(oldBi.select(col("u").as("pb"), col("v").as("w2")), "pb")
-          .filter(col("w1") === col("w2"))
-          .agg(count(lit(1)).as("n")).as[Long].head()
-        // 2 new edges: new-new wedge (center c), old closing edge (u<v)
-        val t2 = newBi.select(col("u").as("c"), col("v").as("wu"))
-          .join(newBi.select(col("u").as("c"), col("v").as("wv")), "c")
-          .filter(col("wu") < col("wv"))
-          .join(old.select(col("pa").as("wu"), col("pb").as("wv")),
-            Seq("wu", "wv"), "left_semi")
-          .agg(count(lit(1)).as("n")).as[Long].head()
-        // 3 new edges: census of the batch's new-edge subgraph. Edges
-        // are canonical (a<b), so each triangle a<b<c is exactly one
-        // (a,b)⋈(b,c) path closed by (a,c) — no orientation machinery
-        // needed at delta scale (a huge backfill batch would swap in
-        // the degree-oriented batch kernel here).
-        val t3 = eNew.select(col("pa").as("a"), col("pb").as("b"))
-          .join(eNew.select(col("pa").as("b"), col("pb").as("c")), "b")
-          .join(eNew.select(col("pa").as("a"), col("pb").as("c")),
-            Seq("a", "c"), "left_semi")
-          .agg(count(lit(1)).as("n")).as[Long].head()
-        val counts = new java.io.File(countPath)
-        val hasCounts = counts.isDirectory && Option(counts.listFiles())
-          .exists(_.exists(_.getName.startsWith("part-")))
-        val (oldEdges, oldTri) =
-          if (hasCounts)
+        val (oldEdges, oldTri, lastBatch) =
+          if (hasParts(countPath))
             spark.read.parquet(countPath)
-              .select("n_edges", "n_triangles").as[(Long, Long)].head()
-          else (0L, 0L)
-        val dE = eNew.count()
-        def publish(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
-          val staged = path + ".staged"
-          df.write.mode("overwrite").parquet(staged)
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory)
-              Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-            f.delete(); ()
-          }
-          rm(new java.io.File(path))
-          if (!new java.io.File(staged).renameTo(new java.io.File(path)))
-            throw new java.io.IOException(
-              s"trianglesSink: commit rename failed for $path")
+              .select("n_edges", "n_triangles", "batch_id")
+              .as[(Long, Long, Long)].head()
+          else (0L, 0L, -1L)
+        val eNew = canon.join(old, Seq("pa", "pb"), "left_anti").persist()
+        if (batchId > lastBatch) {
+          val oldBi = old.select(col("pa").as("u"), col("pb").as("v"))
+            .unionAll(old.select(col("pb").as("u"), col("pa").as("v")))
+          val newBi = eNew.select(col("pa").as("u"), col("pb").as("v"))
+            .unionAll(eNew.select(col("pb").as("u"), col("pa").as("v")))
+          // 1 new edge: common OLD neighbors of each new edge's endpoints
+          val t1 = eNew
+            .join(oldBi.select(col("u").as("pa"), col("v").as("w1")), "pa")
+            .join(oldBi.select(col("u").as("pb"), col("v").as("w2")), "pb")
+            .filter(col("w1") === col("w2"))
+            .agg(count(lit(1)).as("n")).as[Long].head()
+          // 2 new edges: new-new wedge (center c), old closing edge (u<v)
+          val t2 = newBi.select(col("u").as("c"), col("v").as("wu"))
+            .join(newBi.select(col("u").as("c"), col("v").as("wv")), "c")
+            .filter(col("wu") < col("wv"))
+            .join(old.select(col("pa").as("wu"), col("pb").as("wv")),
+              Seq("wu", "wv"), "left_semi")
+            .agg(count(lit(1)).as("n")).as[Long].head()
+          // 3 new edges: census of the batch's new-edge subgraph. Edges
+          // are canonical (a<b), so each triangle a<b<c is exactly one
+          // (a,b)⋈(b,c) path closed by (a,c) — no orientation machinery
+          // needed at delta scale (a huge backfill batch would swap in
+          // the degree-oriented batch kernel here).
+          val t3 = eNew.select(col("pa").as("a"), col("pb").as("b"))
+            .join(eNew.select(col("pa").as("b"), col("pb").as("c")), "b")
+            .join(eNew.select(col("pa").as("a"), col("pb").as("c")),
+              Seq("a", "c"), "left_semi")
+            .agg(count(lit(1)).as("n")).as[Long].head()
+          val row = Seq((oldEdges + eNew.count(), oldTri + t1 + t2 + t3, batchId))
+            .toDF("n_edges", "n_triangles", "batch_id")
+          Publish(countPath)(row.write.mode("overwrite").parquet(_))
         }
-        publish(old.unionAll(eNew), tablePath)
-        publish(Seq((oldEdges + dE, oldTri + t1 + t2 + t3))
-          .toDF("n_edges", "n_triangles"), countPath)
+        Publish(tablePath)(old.unionAll(eNew).write.mode("overwrite").parquet(_))
         eNew.unpersist()
         ()
       }
@@ -1870,11 +1781,14 @@ object Pipelines {
     * partitioned write; the accumulated index is never rewritten.
     *
     * Each micro-batch lands in its own `batch=<id>/cell=<c>/` subtree,
-    * staged and published by ONE rename (the [[zoneMappedSink]]
-    * replay contract: a crashed-and-replayed batch id overwrites its
-    * own dir, never duplicates). Redelivered vec_ids are dropped by an
-    * anti join against the accumulated index — on Delta/Iceberg that
-    * anti join becomes the table's MERGE insert-if-absent.
+    * published by [[graft.io.Publish]]. Redelivered vec_ids are dropped
+    * by an anti join against the OTHER batches of the index — on
+    * Delta/Iceberg that anti join becomes the table's MERGE
+    * insert-if-absent. The batch's own directory is left out of the
+    * anti join, so a replay (crash after the publish, before the
+    * checkpoint commit) stages the same rows again and republishes the
+    * same `batch=<id>` directory: the set of vec_ids and every cell
+    * count are unchanged, never duplicated and never emptied.
     *
     * Cell-population health (the s15 balance diagnostic) is DERIVED
     * from the index by [[ivfCellStats]] rather than maintained as a
@@ -1903,28 +1817,19 @@ object Pipelines {
           .withColumn("_rn", row_number().over(wA))
           .filter(col("_rn") === 1)
           .select(col("vec_id"), col("_cid").as("cell"), col("embedding"))
-        val root = new java.io.File(indexPath)
-        val hasBatches = root.isDirectory && Option(root.listFiles())
-          .exists(_.exists(_.getName.startsWith("batch=")))
+        val own = s"batch=$batchId"
+        val others = Option(new java.io.File(indexPath).listFiles())
+          .getOrElse(Array.empty).map(_.getName)
+          .filter(n => n.startsWith("batch=") && n != own)
         val fresh =
-          if (hasBatches)
-            assigned.join(spark.read.parquet(indexPath).select("vec_id"),
-              Seq("vec_id"), "left_anti")
-          else assigned
-        val staged = new java.io.File(root, s".staged_batch=$batchId")
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(); ()
-        }
-        rm(staged)
-        fresh.write.mode("overwrite").partitionBy("cell")
-          .parquet(staged.toString)
-        val target = new java.io.File(root, s"batch=$batchId")
-        rm(target) // replayed batch id republishes, never duplicates
-        if (!staged.renameTo(target))
-          throw new java.io.IOException(
-            s"ivfIndexSink: commit rename failed for $target")
+          if (others.isEmpty) assigned
+          else assigned.join(
+            spark.read.option("basePath", indexPath)
+              .parquet(others.map(n => s"$indexPath/$n").toIndexedSeq: _*)
+              .select("vec_id"),
+            Seq("vec_id"), "left_anti")
+        Publish(s"$indexPath/$own")(
+          fresh.write.mode("overwrite").partitionBy("cell").parquet(_))
         ()
       }
   }

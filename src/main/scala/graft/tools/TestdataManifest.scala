@@ -48,12 +48,7 @@ object TestdataManifest {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val s = render(spark)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(ManifestPath), s)

@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.clean.Cleaners
 import graft.fixtures.PinFixtures
+import graft.io.Publish
 import graft.model.Schemas
 import graft.stream.Pipelines
 
@@ -24,10 +25,18 @@ class StreamingSpec extends AnyFunSuite {
     Files.createTempDirectory(prefix).toString
 
   test("streamed pin cleaning equals batch cleaning on the same input") {
-    val raw = PinFixtures.pinRaw(spark)
+    streamEqualsBatch(spark)
+  }
+
+  test("streamed pin cleaning equals batch cleaning on the same input (ANSI on)") {
+    streamEqualsBatch(TestSpark.ansi)
+  }
+
+  private def streamEqualsBatch(session: org.apache.spark.sql.SparkSession): Unit = {
+    val raw = PinFixtures.pinRaw(session)
     val envelopeRows = PinFixtures.envelope(raw).as[String].collect().toSeq
 
-    implicit val sqlCtx = spark.sqlContext
+    implicit val sqlCtx = session.sqlContext
     val mem = MemoryStream[String]
     mem.addData(envelopeRows)
     val streamed = Pipelines.cleanPinStream(mem.toDF().select(col("value").as("data")))
@@ -41,7 +50,7 @@ class StreamingSpec extends AnyFunSuite {
     q.processAllAvailable()
     q.stop()
 
-    val got = spark.read.schema(Schemas.pinClean).parquet(sink)
+    val got = session.read.schema(Schemas.pinClean).parquet(sink)
     val want = Cleaners.cleanPin(raw, fillFollower = Some(1000))
     assert(got.count() == want.count())
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
@@ -723,31 +732,29 @@ class StreamingSpec extends AnyFunSuite {
 
   test("publish-by-rename survives a crash between the two renames") {
     val live = tmp("graft_pub") + "/table"
-    def writeStaged(tag: String): Unit =
-      Seq(tag).toDF("v").write.mode("overwrite").parquet(live + ".staged")
+    def publish(tag: String): Unit =
+      Publish(live)(Seq(tag).toDF("v").write.mode("overwrite").parquet(_))
     def readBack(): Set[String] =
       spark.read.parquet(live).as[String].collect().toSet
 
     // normal publish: staged becomes live, no debris left behind
-    writeStaged("v1")
-    Pipelines.publishStaged(live, "spec")
+    publish("v1")
     assert(readBack() == Set("v1"))
-    assert(!new java.io.File(live + ".old").exists())
-    assert(!new java.io.File(live + ".staged").exists())
+    assert(!new java.io.File(Publish.aside(live)).exists())
+    assert(!new java.io.File(Publish.staging(live)).exists())
 
     // crash window: live renamed aside, process dies before the staged
     // rename — the store must be recoverable, not destroyed (this is
     // the delete+rename window the naive publish order loses)
-    assert(new java.io.File(live).renameTo(new java.io.File(live + ".old")))
-    Pipelines.recoverPublished(live, "spec")
+    assert(new java.io.File(live).renameTo(new java.io.File(Publish.aside(live))))
+    Publish.recover(live)
     assert(readBack() == Set("v1"), "crash between renames must recover")
 
-    // crash after commit: stale .old debris must lose to the live dir
-    writeStaged("v2")
-    Pipelines.publishStaged(live, "spec")
+    // crash after commit: stale aside debris must lose to the live dir
+    publish("v2")
     java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(live + ".old"))
-    Pipelines.recoverPublished(live, "spec")
+      java.nio.file.Paths.get(Publish.aside(live)))
+    Publish.recover(live)
     assert(readBack() == Set("v2"), "live dir must win over .old debris")
   }
 
@@ -917,9 +924,9 @@ class StreamingSpec extends AnyFunSuite {
         s"${d.getName} published without its stats")
     }
 
-    // a leftover staging directory (crash before the rename) is a
-    // SIBLING of the table and must be invisible to readers of it
-    val junk = new java.io.File(s"$table.staged-batch-99")
+    // a leftover staging directory (crash before the rename) sits
+    // next to the batch directories and must be invisible to readers
+    val junk = new java.io.File(Publish.staging(s"$table/batch=99"))
     junk.mkdirs()
     spark.range(5).toDF("us").write.mode("overwrite")
       .parquet(junk.getPath + "/data")
@@ -1444,6 +1451,109 @@ class StreamingSpec extends AnyFunSuite {
     assert(c2 == Set(2L, 4L), c2.toString)
   }
 
+  private def copyTree(from: String, to: String): Unit = {
+    val src = java.nio.file.Paths.get(from)
+    val walk = Files.walk(src)
+    try walk.forEach { p =>
+      Files.copy(p, java.nio.file.Paths.get(to).resolve(src.relativize(p)))
+      ()
+    } finally walk.close()
+  }
+
+  /** Runs the two-batch triangle scenario, snapshots both artifacts as
+    * they stood after batch 1, lets `crash` turn the finished batch-2
+    * state into an on-disk crash state, replays batch 2 from its
+    * offsets and checks the result is exact.
+    */
+  private def triangleReplay(
+      crash: (String, String, String, String) => Unit): Unit = {
+    implicit val sqlCtx = spark.sqlContext
+    val root = tmp("graft_tri_crash")
+    val (table, counts, cp) = (s"$root/edges", s"$root/counts", s"$root/ckpt")
+    val mem = MemoryStream[(Long, Long)]
+    def run(): Unit = Pipelines.trianglesSink(
+      mem.toDS().map { case (a, b) => Pipelines.CoEdge(a, b) },
+      table, counts, cp).start().awaitTermination()
+    def snapshot(): (Long, Long) =
+      spark.read.parquet(counts)
+        .select("n_edges", "n_triangles").as[(Long, Long)].head()
+    mem.addData((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (1L, 2L), (3L, 1L))
+    run()
+    copyTree(table, s"$root/pre_edges")
+    copyTree(counts, s"$root/pre_counts")
+    mem.addData((1L, 4L), (2L, 5L), (3L, 5L), (1L, 2L))
+    run()
+    assert(snapshot() == (7L, 3L), snapshot().toString)
+    crash(table, counts, s"$root/pre_edges", s"$root/pre_counts")
+    forceReplay(cp)
+    run()
+    assert(snapshot() == (7L, 3L), s"replay gave ${snapshot()}")
+    val batchCount = graft.api.Graph
+      .triangleStats(spark.read.parquet(table))
+      .select("n_edges", "n_triangles").as[(Long, Long)].head()
+    assert(batchCount == (7L, 3L), s"edge table census gave $batchCount")
+  }
+
+  private def restore(live: String, withCopy: String): Unit = {
+    Publish.deleteTree(live)
+    copyTree(withCopy, live)
+  }
+
+  test("trianglesSink replay after the count publish, before the edge publish, counts each triangle once") {
+    // the counts publish first, so this crash leaves batch 2's counts
+    // next to the batch-1 edge table
+    triangleReplay { (table, _, preEdges, _) => restore(table, preEdges) }
+  }
+
+  test("trianglesSink replay recovers a crash between the two renames of either artifact") {
+    // counts: live copy renamed aside, staged copy not yet renamed in;
+    // the edge table is still the batch-1 one
+    triangleReplay { (table, counts, preEdges, preCounts) =>
+      restore(table, preEdges)
+      copyTree(counts, Publish.staging(counts))
+      Publish.deleteTree(counts)
+      copyTree(preCounts, Publish.aside(counts))
+    }
+    // edges: the counts are published, the edge table sits aside
+    triangleReplay { (table, _, preEdges, _) =>
+      copyTree(table, Publish.staging(table))
+      Publish.deleteTree(table)
+      copyTree(preEdges, Publish.aside(table))
+    }
+  }
+
+  test("trianglesSink replay after both publishes, before the checkpoint commit, changes nothing") {
+    triangleReplay { (_, _, _, _) => () }
+  }
+
+  test("ivfIndexSink replay after the publish, before the checkpoint commit, keeps the batch's vectors") {
+    implicit val sqlCtx = spark.sqlContext
+    val centroids = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0)))
+      .toDF("c_id", "cv")
+    val mem = MemoryStream[(Long, Seq[Double])]
+    val index = tmp("graft_ivf_replay")
+    val cp = tmp("graft_ivf_replay_cp")
+    def run(): Unit = Pipelines.runToCompletion(Pipelines.ivfIndexSink(
+      mem.toDF().toDF("vec_id", "embedding"), centroids, index, cp))
+    def stats(): Seq[(Long, Long)] =
+      Pipelines.ivfCellStats(spark, index).as[(Long, Long)].collect().toSeq
+    def ids(): Set[Long] =
+      spark.read.parquet(index).select("vec_id").as[Long].collect().toSet
+
+    mem.addData((1L, Seq(0.9, 0.1)), (2L, Seq(0.1, 0.9)), (3L, Seq(2.0, 0.0)))
+    run()
+    mem.addData((4L, Seq(0.0, 3.0)), (1L, Seq(0.9, 0.1)), (5L, Seq(0.7, 0.7)))
+    run()
+    val (statsBefore, idsBefore) = (stats(), ids())
+    assert(statsBefore == Seq((1L, 3L), (2L, 2L)), statsBefore.toString)
+    assert(idsBefore == Set(1L, 2L, 3L, 4L, 5L), idsBefore.toString)
+
+    forceReplay(cp)
+    run()
+    assert(stats() == statsBefore, s"replay changed cell stats: ${stats()}")
+    assert(ids() == idsBefore, s"replay changed vec_ids: ${ids()}")
+  }
+
   test("stream-static broadcast enrichment equals the batch join per closed window") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(java.sql.Timestamp, Long, Double)]
@@ -1567,7 +1677,7 @@ class StreamingSpec extends AnyFunSuite {
     // then replays the batch — min-merge recomputes identical state
     forceReplay(s"$root/ckpt")
     assert(new java.io.File(s"$root/table")
-      .renameTo(new java.io.File(s"$root/table.old")))
+      .renameTo(new java.io.File(Publish.aside(s"$root/table"))))
     run()
     assert(state() == Set((1L, 10L, Some(50L)), (2L, 60L, None)))
     // out-of-window purchase (200 > 60+100) never converts u2; a
@@ -1599,7 +1709,7 @@ class StreamingSpec extends AnyFunSuite {
     // then replay batch 1 idempotently (its chunks are all known)
     forceReplay(cp)
     assert(new java.io.File(store)
-      .renameTo(new java.io.File(store + ".old")))
+      .renameTo(new java.io.File(Publish.aside(store))))
     run()
     val hs = spark.read.parquet(store).select("h").as[String].collect()
     assert(hs.toSet == Set(md5("AAAA"), md5("BBBB"), md5("CCCC")),

@@ -2,27 +2,28 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test run — mirrors the
-  * Verify/Bench configuration (UTC, ANSI off, AQE, nanos-as-long).
+/** One shared local session for the whole test run, built from the
+  * same [[Session]] profile as Verify and Bench.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Session.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       // fresh warehouse per test run: saveAsTable locations must not
       // survive the JVM (the in-memory catalog does not)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** A session on the same context with ANSI mode on — for specs that
+    * check a library function does not depend on that setting.
+    */
+  lazy val ansi: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.ansi.enabled", "true")
     s
   }
 
