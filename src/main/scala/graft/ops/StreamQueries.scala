@@ -48,6 +48,12 @@ object StreamQueries {
   private def scratch(dir: String, qname: String): String =
     graft.io.Scratch.runRoot("stream", dir, qname)
 
+  /** Micro-batches committed under a query's scratch root: the
+    * two-run drives check that each run was exactly one batch.
+    */
+  private def commits(root: String): Int =
+    Pipelines.committedBatches(s"$root/ckpt").size
+
   /** An isolated session whose shuffle width sizes the STATEFUL
     * operator's state-store count. A streaming stateful op opens one or
     * more state stores per shuffle partition; at local[32] that fixed
@@ -819,18 +825,15 @@ object StreamQueries {
     // across batches. The file source above sets no limit, so
     // AvailableNow takes the whole backlog in one batch — asserted
     // here via the checkpoint's commit log (ADVICE r11).
-    def commits(): Int =
-      Option(new java.io.File(s"$root/ckpt/commits").listFiles())
-        .map(_.count(_.getName.forall(_.isDigit))).getOrElse(0)
     run()
-    require(commits() == 1,
-      s"qs10 run 1 split into ${commits()} micro-batches; the oracle's " +
+    require(commits(root) == 1,
+      s"qs10 run 1 split into ${commits(root)} micro-batches; the oracle's " +
         "in-batch doc_id order no longer matches arrival order")
     docs.filter(col("doc_id") % 2 === 1)
       .write.mode("append").parquet(s"$root/input")
     run()
-    require(commits() == 2,
-      s"qs10 run 2 ended at ${commits()} total commits (want 2); " +
+    require(commits(root) == 2,
+      s"qs10 run 2 ended at ${commits(root)} total commits (want 2); " +
         "incremental batch split would reorder admissions")
     spark.read.parquet(s"$root/table")
       .select(col("doc_id"), col("source"), col("n_tokens"),
@@ -952,9 +955,6 @@ object StreamQueries {
     // no stateful op here (foreachBatch is stateless), but the gate's
     // per-batch joins are tiny: same width-8 scoped session
     val s8 = stateSession(spark, 8)
-    def commits(): Int =
-      Option(new java.io.File(s"$root/ckpt/commits").listFiles())
-        .map(_.count(_.getName.forall(_.isDigit))).getOrElse(0)
     def run(): Unit = Pipelines.runToCompletion(
       Pipelines.dedupGateSink(
         s8.readStream.schema(sch).parquet(s"$root/input"),
@@ -965,14 +965,14 @@ object StreamQueries {
     // the oracle's two-phase structure relies on each run landing as
     // ONE micro-batch (the index refreshes at batch boundaries); a
     // source rate limit would split phases — fail loudly, like qs10
-    require(commits() == 1,
-      s"qs12 run 1 split into ${commits()} micro-batches; the index " +
+    require(commits(root) == 1,
+      s"qs12 run 1 split into ${commits(root)} micro-batches; the index " +
         "refresh cadence no longer matches the oracle's two phases")
     incoming.filter(col("doc_id") % 2 === 1)
       .write.mode("append").parquet(s"$root/input")
     run()
-    require(commits() == 2,
-      s"qs12 run 2 ended at ${commits()} total commits (want 2); " +
+    require(commits(root) == 2,
+      s"qs12 run 2 ended at ${commits(root)} total commits (want 2); " +
         "batch split would move docs between screening phases")
     spark.read.parquet(s"$root/decisions")
       .select(col("doc_id"), col("admitted"), col("dup_of"))
@@ -1371,18 +1371,15 @@ object StreamQueries {
             .as[Pipelines.TsEvent], delayUs = 3600000000L).toDF(),
         s"$root/table", s"$root/ckpt",
         key = "event_type", orderCol = "n_events"))
-    def commits(): Int =
-      Option(new java.io.File(s"$root/ckpt/commits").listFiles())
-        .map(_.count(_.getName.forall(_.isDigit))).getOrElse(0)
     run()
-    require(commits() == 1,
-      s"qs18 run 1 split into ${commits()} micro-batches; the oracle's " +
+    require(commits(root) == 1,
+      s"qs18 run 1 split into ${commits(root)} micro-batches; the oracle's " +
         "(half, event_id) order no longer matches arrival order")
     ev.filter(col("event_id") % 2 === 1)
       .write.mode("append").parquet(s"$root/input")
     run()
-    require(commits() == 2,
-      s"qs18 run 2 ended at ${commits()} total commits (want 2)")
+    require(commits(root) == 2,
+      s"qs18 run 2 ended at ${commits(root)} total commits (want 2)")
     spark.read.parquet(s"$root/table")
       .select(col("event_type"), col("n_events"), col("n_late"),
         col("max_skew_us"), col("max_ts_us"))
@@ -1425,18 +1422,15 @@ object StreamQueries {
       Pipelines.abExposureSink(
         s8.readStream.schema(sch).parquet(s"$root/input"),
         s"$root/table", s"$root/ckpt"))
-    def commits(): Int =
-      Option(new java.io.File(s"$root/ckpt/commits").listFiles())
-        .map(_.count(_.getName.forall(_.isDigit))).getOrElse(0)
     run()
-    require(commits() == 1,
-      s"qs19 run 1 split into ${commits()} micro-batches; the sink's " +
+    require(commits(root) == 1,
+      s"qs19 run 1 split into ${commits(root)} micro-batches; the sink's " +
         "cross-batch event-time-order contract no longer holds")
     ev.filter(col("us") >= boundaryUs)
       .write.mode("append").parquet(s"$root/input")
     run()
-    require(commits() == 2,
-      s"qs19 run 2 ended at ${commits()} total commits (want 2)")
+    require(commits(root) == 2,
+      s"qs19 run 2 ended at ${commits(root)} total commits (want 2)")
     EventOps.abReadout(
       spark.read.parquet(s"$root/table")
         .select(expr(EventOps.abArmSql).cast("int").as("arm"),
@@ -1750,18 +1744,15 @@ object StreamQueries {
             .as[Pipelines.FunnelEvent]).toDF(),
         s"$root/table", s"$root/ckpt",
         key = "user_id", orderCol = "stage"))
-    def commits(): Int =
-      Option(new java.io.File(s"$root/ckpt/commits").listFiles())
-        .map(_.count(_.getName.forall(_.isDigit))).getOrElse(0)
     run()
-    require(commits() == 1,
-      s"qs23 run 1 split into ${commits()} micro-batches; the " +
+    require(commits(root) == 1,
+      s"qs23 run 1 split into ${commits(root)} micro-batches; the " +
         "cross-batch event-time-order contract no longer holds")
     ev.filter(col("us") >= boundaryUs)
       .write.mode("append").parquet(s"$root/input")
     run()
-    require(commits() == 2,
-      s"qs23 run 2 ended at ${commits()} total commits (want 2)")
+    require(commits(root) == 2,
+      s"qs23 run 2 ended at ${commits(root)} total commits (want 2)")
     val st = spark.read.parquet(s"$root/table")
     st.agg(sum(when(col("stage") >= 1, 1L).otherwise(0L)).as("n_view"),
         sum(when(col("stage") >= 2, 1L).otherwise(0L)).as("n_view_click"),
@@ -2445,18 +2436,15 @@ object StreamQueries {
       Pipelines.gstStateSink(
         s8.readStream.schema(sch).parquet(s"$root/input"),
         s"$root/table", s"$root/ckpt"))
-    def commits(): Int =
-      Option(new java.io.File(s"$root/ckpt/commits").listFiles())
-        .map(_.count(_.getName.forall(_.isDigit))).getOrElse(0)
     run()
-    require(commits() == 1,
-      s"qs29 run 1 split into ${commits()} micro-batches; the sink's " +
+    require(commits(root) == 1,
+      s"qs29 run 1 split into ${commits(root)} micro-batches; the sink's " +
         "cross-batch event-time-order contract no longer holds")
     ev.filter(col("us") >= boundaryUs)
       .write.mode("append").parquet(s"$root/input")
     run()
-    require(commits() == 2,
-      s"qs29 run 2 ended at ${commits()} total commits (want 2)")
+    require(commits(root) == 2,
+      s"qs29 run 2 ended at ${commits(root)} total commits (want 2)")
     EventOps.gstLooks(
       spark.read.parquet(s"$root/table")
         .select(expr(EventOps.abArmSql).cast("int").as("arm"),
@@ -2532,16 +2520,13 @@ object StreamQueries {
             .as[Pipelines.SAsOfEvent],
           tolUs = 1800000000L).toDF(),
         s"$root/sink", s"$root/ckpt"))
-    def commits(): Int =
-      Option(new java.io.File(s"$root/ckpt/commits").listFiles())
-        .map(_.count(_.getName.forall(_.isDigit))).getOrElse(0)
     run()
-    val c1 = commits()
+    val c1 = commits(root)
     require(c1 >= 1, s"qs30 run 1 made no commit")
     ev.filter(col("us") >= boundaryUs)
       .write.mode("append").parquet(s"$root/input")
     run()
-    require(commits() > c1, s"qs30 run 2 made no commit")
+    require(commits(root) > c1, s"qs30 run 2 made no commit")
     spark.read.parquet(s"$root/sink")
       .select(col("user_id"), col("purchase_id"), col("purchase_us"),
         col("click_id"), col("click_us"), col("lag_us"))

@@ -164,6 +164,14 @@ object Pipelines {
     q.awaitTermination()
   }
 
+  /** Batch ids in a checkpoint's commit log (`<checkpoint>/commits/<id>`),
+    * ascending; empty before the first commit.
+    */
+  def committedBatches(checkpoint: String): Seq[Long] =
+    Option(new java.io.File(checkpoint, "commits").listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.forall(_.isDigit))
+      .map(_.toLong).sorted
+
   /** True when `path` is a directory holding parquet part files. An
     * existing-but-empty dir (fresh temp dir, wiped table) is a first
     * write, not a merge target.

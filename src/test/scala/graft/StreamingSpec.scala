@@ -1600,9 +1600,7 @@ class StreamingSpec extends AnyFunSuite {
   // re-executes that epoch with the same offsets and batch id.
   private def forceReplay(checkpoint: String): Unit = {
     val commits = new java.io.File(checkpoint, "commits")
-    val latest = Option(commits.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.forall(_.isDigit))
-      .maxBy(_.getName.toLong)
+    val latest = new java.io.File(commits, Pipelines.committedBatches(checkpoint).max.toString)
     assert(latest.delete(), s"could not delete commit marker $latest")
     // the local checkpoint FS is a ChecksumFileSystem: a stale
     // .N.crc sidecar makes the replay's rename-into-place throw
