@@ -646,27 +646,19 @@ object Dedup {
       // injectable so specs can force the distributed fixpoint path
       // (the production cutoff leaves it unreachable at fixture sizes)
       smallCutoff: Long = SmallLabelGraphEdges): DataFrame = {
-    val ccLog = sys.env.contains("SPARK_GRAFT_CC_LOG")
-    def logStage(name: String, t0: Long): Unit = if (ccLog)
-      System.err.println(f"[cc] $name ${(System.nanoTime() - t0) / 1e9}%.3f s")
     // eager: evaluate the (often expensive) pair pipeline exactly once —
     // a lazy persist would race its two union branches in one job
-    val tF = System.nanoTime()
     val fwd = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
       .cutLineage
-    logStage("pairs-ckpt", tF)
     // seed labels from the symmetric neighborhood minimum
-    val tS = System.nanoTime()
     val labels0 = fwd
       .unionByName(fwd.select(col("v").as("u"), col("u").as("v")))
       .groupBy(col("u"))
       .agg(least(min(col("v")), col("u")).as("label"))
       .select(col("u").as("doc_id"), col("label"))
       .cutLineage
-    logStage("seed-labels", tS)
     // contract: original edges -> seed-label edges (directed half is
     // enough; the fixpoint resymmetrizes), self-loops out, deduped
-    val tC = System.nanoTime()
     val byId = labels0.select(col("doc_id"), col("label"))
     val eC = fwd
       .join(byId.select(col("doc_id").as("u"), col("label").as("lu")), "u")
@@ -675,7 +667,6 @@ object Dedup {
       .select(col("lu").as("u"), col("lv").as("v"))
       .distinct()
       .cutLineage
-    logStage("contract", tC)
     val nC = eC.count()
     val labels =
       if (nC == 0) labels0 // every component collapsed at the seed
@@ -685,7 +676,6 @@ object Dedup {
         // near-empty cluster — the bail-out every production CC takes
         // once contraction has done its job. Bounded by construction:
         // nC edges of two longs, <= ~16 MB at the cutoff.
-        val tU = System.nanoTime()
         val parent = scala.collection.mutable.HashMap.empty[Long, Long]
         def find(x: Long): Long = {
           var r = x
@@ -706,13 +696,11 @@ object Dedup {
         val comp = parent.keys.toSeq.map(k => (k, find(k)))
         val sess = labels0.sparkSession
         import sess.implicits._
-        val compDf = comp.toDF("label", "_c")
-        logStage(s"union-find(${comp.size} labels)", tU)
-        labels0.join(broadcast(compDf), Seq("label"), "left")
+        labels0.join(broadcast(comp.toDF("label", "_c")), Seq("label"), "left")
           .select(col("doc_id"),
             coalesce(col("_c"), col("label")).as("label"))
       } else {
-        val comp = minLabelFixpoint(eC, maxRounds, ccLog, logStage)
+        val comp = minLabelFixpoint(eC, maxRounds)
         labels0
           .join(comp.select(col("doc_id").as("label"), col("label").as("_c")),
             Seq("label"), "left")
@@ -733,8 +721,7 @@ object Dedup {
     * jump into one min-aggregate; the decimal label-sum (labels
     * non-increasing) is the fixpoint test. Returns (doc_id, label).
     */
-  private def minLabelFixpoint(fwd: DataFrame, maxRounds: Int,
-      ccLog: Boolean, logStage: (String, Long) => Unit): DataFrame = {
+  private def minLabelFixpoint(fwd: DataFrame, maxRounds: Int): DataFrame = {
     val edges = fwd
       .unionByName(fwd.select(col("v").as("u"), col("u").as("v")))
       .repartition(col("v"))
@@ -752,7 +739,6 @@ object Dedup {
     var changed = true
     var round = 0
     while (changed && round < maxRounds) {
-      val tRound = System.nanoTime()
       val n1 = edges
         .join(labels.select(col("doc_id").as("v"), col("label")), "v")
         .select(col("u").as("doc_id"), col("label"))
@@ -773,14 +759,12 @@ object Dedup {
       changed = s.compareTo(prevSum) != 0
       prevSum = s
       round += 1
-      logStage(s"round$round(changed=$changed)", tRound)
     }
     edges.unpersist(blocking = false)
     if (changed)
       throw new IllegalStateException(
         s"nearDupClusters did not converge in $maxRounds rounds " +
           "(labels still moving); raise maxRounds")
-    if (ccLog) System.err.println(s"[cc] converged in $round rounds")
     labels
   }
 

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.io.{Publish, Sources}
 import graft.stream.Pipelines
@@ -53,6 +54,34 @@ object StreamQueries {
     */
   private def commits(root: String): Int =
     Pipelines.committedBatches(s"$root/ckpt").size
+
+  /** The two-run drive: `first` lands as the source's files under
+    * `root/input` and the query built by `build` (over a streaming read
+    * of them, in a width-8 [[stateSession]]) runs to completion; then
+    * `second` lands as new files and it runs again on the same
+    * checkpoint. Each run must commit exactly one micro-batch: the
+    * oracles of these queries split the input into two phases at the
+    * run boundary (in-batch arrival order, the index refresh, the
+    * cross-batch event-time order), and a source rate limit or a batch
+    * split would move rows between phases — so it fails loudly.
+    */
+  private def twoRuns(root: String, qname: String, first: DataFrame,
+      second: DataFrame)(build: DataFrame => DataStreamWriter[Row]): Unit = {
+    first.write.mode("overwrite").parquet(s"$root/input")
+    val sch = first.sparkSession.read.parquet(s"$root/input").schema
+    val s8 = stateSession(first.sparkSession, 8)
+    def run(n: Int): Unit = {
+      Pipelines.runToCompletion(
+        build(s8.readStream.schema(sch).parquet(s"$root/input")))
+      require(commits(root) == n,
+        s"$qname run $n ended at ${commits(root)} total commits (want $n): " +
+          "a run split into several micro-batches, so the oracle's two " +
+          "phases no longer match the stream's batches")
+    }
+    run(1)
+    second.write.mode("append").parquet(s"$root/input")
+    run(2)
+  }
 
   /** An isolated session whose shuffle width sizes the STATEFUL
     * operator's state-store count. A streaming stateful op opens one or
@@ -299,9 +328,7 @@ object StreamQueries {
     * the batching-invariance mechanism) and project the stored view to
     * exact BIGINT cents on both sides — the qs9 `monetary_cents`
     * pattern. Rule of thumb: decimals internally, never on a final
-    * query surface. The batch-twin self-check + fold forensics remain
-    * available behind `SPARK_GRAFT_QS4_AUDIT=1` (off by default: the
-    * always-on twin cost ~1.5 s/run once the row was adjudicated).
+    * query surface. The DuckDB oracle hash is qs4's gate.
     */
   val qs4 = OpQuery.oracled("qs4_stream_aggview_fold",
     """SELECT substr(event_type, 1, 1) AS etype_class,
@@ -315,8 +342,6 @@ object StreamQueries {
       "batching-invariant)") { (spark, dir) =>
     val root = scratch(dir, "qs4")
     Publish.deleteTree(root)
-    val auditOn = sys.env.get("SPARK_GRAFT_QS4_AUDIT").contains("1")
-    val audit = s"$root/audit"
     val ev = Sources.table(spark, dir, "events")
       .select(col("event_id"), col("event_type"), col("value"))
     val dim = ev.select(col("event_type")).distinct()
@@ -329,8 +354,7 @@ object StreamQueries {
         spark.readStream.schema(sch).parquet(s"$root/input").drop("event_id"),
         dim, s"$root/table", s"$root/ckpt",
         joinKey = "event_type", viewKey = "etype_class",
-        valueCol = "value",
-        auditDir = if (auditOn) Some(audit) else None))
+        valueCol = "value"))
     run()
     ev.filter(col("event_id") % 2 === 1)
       .write.mode("append").parquet(s"$root/input")
@@ -338,78 +362,10 @@ object StreamQueries {
     run() // no new files: the fold must be a no-op
     // decimal fold stays internal; the query SURFACE is exact BIGINT
     // cents (decimal(18,2) * 100 is integral, so CAST is exact)
-    val view = spark.read.parquet(s"$root/table")
+    spark.read.parquet(s"$root/table")
       .select(col("etype_class"), col("n_rows"),
         (col("s") * lit(100)).cast("bigint").as("s_cents"))
       .orderBy("etype_class")
-    if (auditOn) selfCheckAggView(spark, root, audit, view,
-      // the batch twin of the oracle, from the SAME source frame
-      ev.withColumn("etype_class", substring(col("event_type"), 1, 1))
-        .groupBy("etype_class")
-        .agg(count(lit(1)).cast("bigint").as("n_rows"),
-          (sum(col("value").cast("decimal(18,2)")) * lit(100))
-            .cast("bigint").as("s_cents"))
-        .orderBy("etype_class"))
-    view
-  }
-
-  /** qs4's in-session divergence detector: compares the streamed view
-    * with its batch twin row-by-row and, on ANY mismatch, prints the
-    * diff plus the complete fold forensics (per-batch partials, trail,
-    * `_LAST_BATCH`, the stream-side input recount) to stderr — the
-    * channel the driver records. Never throws: the view is still
-    * returned so the oracle compare stays the authoritative verdict;
-    * this only makes a red row diagnosable.
-    */
-  private def selfCheckAggView(spark: SparkSession, root: String,
-      audit: String, view: DataFrame, twin: DataFrame): Unit = {
-    try {
-      def render(df: DataFrame): Seq[String] =
-        df.collect().toSeq.map(r => r.toSeq.map {
-          case d: java.math.BigDecimal => d.toPlainString
-          case x => String.valueOf(x)
-        }.mkString("|"))
-      val got = render(view)
-      val want = render(twin)
-      // (the unconditional [qs4-view] value render was retired after
-      // two consecutive driver-green rounds — r13/r14 policy; only
-      // the divergence dump below remains)
-      if (got != want) {
-        val err = System.err
-        err.println("[qs4-selfcheck] DIVERGENCE view != batch twin")
-        err.println(s"[qs4-selfcheck] view rows (etype_class|n_rows|s):")
-        got.foreach(r => err.println(s"[qs4-selfcheck]   got  $r"))
-        want.foreach(r => err.println(s"[qs4-selfcheck]   want $r"))
-        val mark = new java.io.File(s"$root/table/_LAST_BATCH")
-        err.println(s"[qs4-selfcheck] _LAST_BATCH=" + (if (mark.exists())
-          new String(java.nio.file.Files.readAllBytes(mark.toPath), "UTF-8").trim
-        else "<absent>"))
-        val trail = new java.io.File(s"$audit/trail.log")
-        if (trail.exists())
-          new String(java.nio.file.Files.readAllBytes(trail.toPath), "UTF-8")
-            .linesIterator.foreach(l => err.println(s"[qs4-selfcheck] trail: $l"))
-        Option(new java.io.File(audit).listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.startsWith("partial_b")).sortBy(_.getName)
-          .foreach { d =>
-            render(spark.read.parquet(d.getPath).orderBy("etype_class"))
-              .foreach(r => err.println(s"[qs4-selfcheck] ${d.getName}: $r"))
-          }
-        // recount the stream-side INPUT: localizes the divergence to
-        // either the input write (events -> input parquet) or the fold
-        render(spark.read.parquet(s"$root/input")
-          .withColumn("etype_class", substring(col("event_type"), 1, 1))
-          .groupBy("etype_class")
-          .agg(count(lit(1)).cast("bigint").as("n_rows"),
-            sum(col("value").cast("decimal(18,2)"))
-              .cast("decimal(18,2)").as("s"))
-          .orderBy("etype_class"))
-          .foreach(r => err.println(s"[qs4-selfcheck] input-agg: $r"))
-        err.println("[qs4-selfcheck] end of dump; returning the view unchanged")
-      }
-    } catch {
-      case t: Throwable =>
-        System.err.println(s"[qs4-selfcheck] dump itself failed: $t")
-    }
   }
 
   /** qs5: the streaming CDC sink under the hard signal — qs3's
@@ -804,37 +760,22 @@ object StreamQueries {
     val docs = Sources.table(spark, dir, "documents")
       .select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"))
-    docs.filter(col("doc_id") % 2 === 0)
-      .write.mode("overwrite").parquet(s"$root/input")
-    val sch = spark.read.parquet(s"$root/input").schema
-    // same fMGWS state-width right-sizing as qs9
-    val s8 = stateSession(spark, 8)
-    def run(): Unit = Pipelines.runToCompletion(
-      Pipelines.stateUpsertSink(
-        Pipelines.tokenBudget(
-          s8.readStream.schema(sch).parquet(s"$root/input")
-            .as[Pipelines.BudgetDoc], budget = 1000L)
-          .toDF()
-          .withColumn("admitted", col("admitted").cast("int")),
-        s"$root/table", s"$root/ckpt",
-        key = "doc_id", orderCol = "cum_tokens"))
     // The oracle's (half, doc_id) admission order relies on EACH
     // incremental run landing as ONE micro-batch: tokenBudget pins
     // processing order by doc_id only WITHIN a batch, so a source rate
     // limit (maxFilesPerTrigger) would silently reorder admissions
-    // across batches. The file source above sets no limit, so
-    // AvailableNow takes the whole backlog in one batch — asserted
-    // here via the checkpoint's commit log (ADVICE r11).
-    run()
-    require(commits(root) == 1,
-      s"qs10 run 1 split into ${commits(root)} micro-batches; the oracle's " +
-        "in-batch doc_id order no longer matches arrival order")
-    docs.filter(col("doc_id") % 2 === 1)
-      .write.mode("append").parquet(s"$root/input")
-    run()
-    require(commits(root) == 2,
-      s"qs10 run 2 ended at ${commits(root)} total commits (want 2); " +
-        "incremental batch split would reorder admissions")
+    // across batches. The file source sets no limit, so AvailableNow
+    // takes the whole backlog in one batch — twoRuns asserts it via
+    // the checkpoint's commit log (ADVICE r11).
+    twoRuns(root, "qs10", docs.filter(col("doc_id") % 2 === 0),
+        docs.filter(col("doc_id") % 2 === 1)) { input =>
+      Pipelines.stateUpsertSink(
+        Pipelines.tokenBudget(input.as[Pipelines.BudgetDoc], budget = 1000L)
+          .toDF()
+          .withColumn("admitted", col("admitted").cast("int")),
+        s"$root/table", s"$root/ckpt",
+        key = "doc_id", orderCol = "cum_tokens")
+    }
     spark.read.parquet(s"$root/table")
       .select(col("doc_id"), col("source"), col("n_tokens"),
         col("admitted"), col("cum_tokens"))
@@ -949,31 +890,15 @@ object StreamQueries {
     // immutable shared corpus index; this run's admissions land in a
     // run-root DELTA the gate unions in (nothing is ever copied)
     val idx = DedupOps.ensureIncrementalIndex(spark, dir)
-    incoming.filter(col("doc_id") % 2 === 0)
-      .write.mode("overwrite").parquet(s"$root/input")
-    val sch = spark.read.parquet(s"$root/input").schema
     // no stateful op here (foreachBatch is stateless), but the gate's
-    // per-batch joins are tiny: same width-8 scoped session
-    val s8 = stateSession(spark, 8)
-    def run(): Unit = Pipelines.runToCompletion(
-      Pipelines.dedupGateSink(
-        s8.readStream.schema(sch).parquet(s"$root/input"),
+    // per-batch joins are tiny: the width-8 scoped session suits it
+    twoRuns(root, "qs12", incoming.filter(col("doc_id") % 2 === 0),
+        incoming.filter(col("doc_id") % 2 === 1)) { input =>
+      Pipelines.dedupGateSink(input,
         corpusIndexPath = idx, deltaIndexPath = s"$root/delta",
         decisionsPath = s"$root/decisions",
-        checkpoint = s"$root/ckpt", threshold = 0.5))
-    run()
-    // the oracle's two-phase structure relies on each run landing as
-    // ONE micro-batch (the index refreshes at batch boundaries); a
-    // source rate limit would split phases — fail loudly, like qs10
-    require(commits(root) == 1,
-      s"qs12 run 1 split into ${commits(root)} micro-batches; the index " +
-        "refresh cadence no longer matches the oracle's two phases")
-    incoming.filter(col("doc_id") % 2 === 1)
-      .write.mode("append").parquet(s"$root/input")
-    run()
-    require(commits(root) == 2,
-      s"qs12 run 2 ended at ${commits(root)} total commits (want 2); " +
-        "batch split would move docs between screening phases")
+        checkpoint = s"$root/ckpt", threshold = 0.5)
+    }
     spark.read.parquet(s"$root/decisions")
       .select(col("doc_id"), col("admitted"), col("dup_of"))
       .orderBy("doc_id")
@@ -1360,26 +1285,14 @@ object StreamQueries {
     val ev = Sources.table(spark, dir, "events")
       .select(col("event_id"), col("event_type"),
         expr("ts div 1000").as("us"))
-    ev.filter(col("event_id") % 2 === 0)
-      .write.mode("overwrite").parquet(s"$root/input")
-    val sch = spark.read.parquet(s"$root/input").schema
-    val s8 = stateSession(spark, 8)
-    def run(): Unit = Pipelines.runToCompletion(
+    twoRuns(root, "qs18", ev.filter(col("event_id") % 2 === 0),
+        ev.filter(col("event_id") % 2 === 1)) { input =>
       Pipelines.stateUpsertSink(
-        Pipelines.lateAudit(
-          s8.readStream.schema(sch).parquet(s"$root/input")
-            .as[Pipelines.TsEvent], delayUs = 3600000000L).toDF(),
+        Pipelines.lateAudit(input.as[Pipelines.TsEvent],
+          delayUs = 3600000000L).toDF(),
         s"$root/table", s"$root/ckpt",
-        key = "event_type", orderCol = "n_events"))
-    run()
-    require(commits(root) == 1,
-      s"qs18 run 1 split into ${commits(root)} micro-batches; the oracle's " +
-        "(half, event_id) order no longer matches arrival order")
-    ev.filter(col("event_id") % 2 === 1)
-      .write.mode("append").parquet(s"$root/input")
-    run()
-    require(commits(root) == 2,
-      s"qs18 run 2 ended at ${commits(root)} total commits (want 2)")
+        key = "event_type", orderCol = "n_events")
+    }
     spark.read.parquet(s"$root/table")
       .select(col("event_type"), col("n_events"), col("n_late"),
         col("max_skew_us"), col("max_ts_us"))
@@ -1414,23 +1327,10 @@ object StreamQueries {
     val ev = Sources.table(spark, dir, "events")
       .select(col("user_id"), col("event_type"),
         expr("ts div 1000").as("us"))
-    ev.filter(col("us") < boundaryUs)
-      .write.mode("overwrite").parquet(s"$root/input")
-    val sch = spark.read.parquet(s"$root/input").schema
-    val s8 = stateSession(spark, 8)
-    def run(): Unit = Pipelines.runToCompletion(
-      Pipelines.abExposureSink(
-        s8.readStream.schema(sch).parquet(s"$root/input"),
-        s"$root/table", s"$root/ckpt"))
-    run()
-    require(commits(root) == 1,
-      s"qs19 run 1 split into ${commits(root)} micro-batches; the sink's " +
-        "cross-batch event-time-order contract no longer holds")
-    ev.filter(col("us") >= boundaryUs)
-      .write.mode("append").parquet(s"$root/input")
-    run()
-    require(commits(root) == 2,
-      s"qs19 run 2 ended at ${commits(root)} total commits (want 2)")
+    twoRuns(root, "qs19", ev.filter(col("us") < boundaryUs),
+        ev.filter(col("us") >= boundaryUs)) {
+      Pipelines.abExposureSink(_, s"$root/table", s"$root/ckpt")
+    }
     EventOps.abReadout(
       spark.read.parquet(s"$root/table")
         .select(expr(EventOps.abArmSql).cast("int").as("arm"),
@@ -1733,26 +1633,13 @@ object StreamQueries {
       .filter(col("event_type").isin("view", "click", "purchase"))
       .select(col("user_id"), col("event_type"),
         expr("ts div 1000").as("us"))
-    ev.filter(col("us") < boundaryUs)
-      .write.mode("overwrite").parquet(s"$root/input")
-    val sch = spark.read.parquet(s"$root/input").schema
-    val s8 = stateSession(spark, 8)
-    def run(): Unit = Pipelines.runToCompletion(
+    twoRuns(root, "qs23", ev.filter(col("us") < boundaryUs),
+        ev.filter(col("us") >= boundaryUs)) { input =>
       Pipelines.stateUpsertSink(
-        Pipelines.funnelStages(
-          s8.readStream.schema(sch).parquet(s"$root/input")
-            .as[Pipelines.FunnelEvent]).toDF(),
+        Pipelines.funnelStages(input.as[Pipelines.FunnelEvent]).toDF(),
         s"$root/table", s"$root/ckpt",
-        key = "user_id", orderCol = "stage"))
-    run()
-    require(commits(root) == 1,
-      s"qs23 run 1 split into ${commits(root)} micro-batches; the " +
-        "cross-batch event-time-order contract no longer holds")
-    ev.filter(col("us") >= boundaryUs)
-      .write.mode("append").parquet(s"$root/input")
-    run()
-    require(commits(root) == 2,
-      s"qs23 run 2 ended at ${commits(root)} total commits (want 2)")
+        key = "user_id", orderCol = "stage")
+    }
     val st = spark.read.parquet(s"$root/table")
     st.agg(sum(when(col("stage") >= 1, 1L).otherwise(0L)).as("n_view"),
         sum(when(col("stage") >= 2, 1L).otherwise(0L)).as("n_view_click"),
@@ -2428,23 +2315,10 @@ object StreamQueries {
     val ev = Sources.table(spark, dir, "events")
       .select(col("user_id"), col("event_type"),
         expr("ts div 1000").as("us"))
-    ev.filter(col("us") < boundaryUs)
-      .write.mode("overwrite").parquet(s"$root/input")
-    val sch = spark.read.parquet(s"$root/input").schema
-    val s8 = stateSession(spark, 8)
-    def run(): Unit = Pipelines.runToCompletion(
-      Pipelines.gstStateSink(
-        s8.readStream.schema(sch).parquet(s"$root/input"),
-        s"$root/table", s"$root/ckpt"))
-    run()
-    require(commits(root) == 1,
-      s"qs29 run 1 split into ${commits(root)} micro-batches; the sink's " +
-        "cross-batch event-time-order contract no longer holds")
-    ev.filter(col("us") >= boundaryUs)
-      .write.mode("append").parquet(s"$root/input")
-    run()
-    require(commits(root) == 2,
-      s"qs29 run 2 ended at ${commits(root)} total commits (want 2)")
+    twoRuns(root, "qs29", ev.filter(col("us") < boundaryUs),
+        ev.filter(col("us") >= boundaryUs)) {
+      Pipelines.gstStateSink(_, s"$root/table", s"$root/ckpt")
+    }
     EventOps.gstLooks(
       spark.read.parquet(s"$root/table")
         .select(expr(EventOps.abArmSql).cast("int").as("arm"),

@@ -1,9 +1,11 @@
 package graft.stream
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.clean.Cleaners
 import graft.io.{Publish, Sources}
@@ -25,6 +27,24 @@ import graft.model.Schemas
   *    unbounded global state;
   *  - sinks are parquet (Delta is a cloud-only jar); the writer shape is
   *    identical, so a Delta/Kafka sink is a format swap.
+  *
+  * Every `foreachBatch` sink runs through one checkpointed writer
+  * (`eachBatch`) and gets exactly-once output under crash and replay
+  * from one of two protocols, both committed by [[graft.io.Publish]]:
+  *  - a per-batch directory `batch=<id>` for append-shaped outputs, so
+  *    a replayed batch rewrites its own directory instead of appending
+  *    a second copy: [[trendingTopK]], [[windowedHistQuantiles]],
+  *    [[zoneMappedSink]], [[ivfIndexSink]] and [[routedSink]] (which
+  *    overwrites each route's `batch=<id>` directly);
+  *  - the read-merge-publish `foldTable` for cumulative tables:
+  *    [[upsertSink]], [[stateUpsertSink]], [[cdcSink]],
+  *    [[abExposureSink]], [[gstStateSink]] and [[chunkStoreSink]]
+  *    re-apply an idempotent merge on replay; the additive merges —
+  *    [[aggViewSink]], [[minViewSink]] and the [[trianglesSink]] count
+  *    table — also commit a `_LAST_BATCH` mark with the data, skip a
+  *    batch equal to it and fail on a batch behind it.
+  * [[dedupGateSink]]'s decisions leg is the exception: it appends, so
+  * it stays at-least-once (a replay re-appends identical decisions).
   */
 object Pipelines {
 
@@ -172,23 +192,93 @@ object Pipelines {
       .map(_.getName).filter(_.forall(_.isDigit))
       .map(_.toLong).sorted
 
-  /** True when `path` is a directory holding parquet part files. An
-    * existing-but-empty dir (fresh temp dir, wiped table) is a first
-    * write, not a merge target.
+  /** The checkpointed writer behind every `foreachBatch` sink in this
+    * file: `body` gets each micro-batch and its id, and AvailableNow
+    * drains the backlog, then stops. `mode` is fixed by the sink's
+    * upstream (Update for keyed-state folds, Append otherwise).
     */
-  private def hasParts(path: String): Boolean =
-    Option(new java.io.File(path).listFiles())
-      .exists(_.exists(_.getName.startsWith("part-")))
+  private def eachBatch[T](ds: Dataset[T], checkpoint: String,
+      mode: OutputMode)(body: (Dataset[T], Long) => Unit): DataStreamWriter[T] =
+    ds.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(body)
+
+  /** The parquet table at `path`, or None while it holds no part files
+    * (a fresh or wiped directory is a first write, not a merge target).
+    */
+  private def stored(spark: SparkSession, path: String): Option[DataFrame] =
+    if (Option(new java.io.File(path).listFiles())
+        .exists(_.exists(_.getName.startsWith("part-"))))
+      Some(spark.read.parquet(path))
+    else None
+
+  /** The read-merge-publish fold behind every cumulative table: recover
+    * a crash between the publish renames, hand the stored table (None
+    * before the first write) to `merge`, and publish the result by
+    * [[graft.io.Publish]].
+    *
+    * An additive merge (`n += n_delta`) would double-count a replayed
+    * batch, so it passes its `batchId`: the id is written as
+    * `_LAST_BATCH` into the staged copy, so data and mark move in one
+    * rename. Within one checkpoint a restart re-runs only the last
+    * uncommitted batch, so a batch equal to the mark is a replay and is
+    * skipped, and a batch behind the mark means the table was written
+    * under another checkpoint — that fails, naming the table and both
+    * ids. Idempotent merges pass no id; a fresh checkpoint may feed
+    * them.
+    */
+  private def foldTable(spark: SparkSession, tablePath: String,
+      batchId: Option[Long] = None)(merge: Option[DataFrame] => DataFrame)
+      : Unit = {
+    Publish.recover(tablePath)
+    val markFile = Paths.get(tablePath, "_LAST_BATCH")
+    val mark =
+      if (Files.exists(markFile)) Some(Files.readString(markFile).trim.toLong)
+      else None
+    (batchId, mark) match {
+      case (Some(id), Some(m)) if id < m =>
+        throw new IllegalStateException(s"$tablePath: _LAST_BATCH $m is " +
+          s"ahead of incoming batch $id; the table was written under " +
+          "another checkpoint")
+      case (Some(id), Some(m)) if id == m => () // replay: already folded in
+      case _ =>
+        val merged = merge(stored(spark, tablePath))
+        Publish(tablePath) { staged =>
+          merged.write.mode("overwrite").parquet(staged)
+          batchId.foreach(id => Files.writeString(
+            Paths.get(staged, "_LAST_BATCH"), id.toString))
+        }
+    }
+  }
+
+  /** The latest row per `key` by `orderCol`, ties broken by a full-row
+    * hash: two rows for one key with the same `orderCol` but different
+    * payloads would otherwise be picked arbitrarily per run, and a
+    * replay could publish a different row than the original epoch did.
+    * The hash is a pure function of the row, so replays pick
+    * identically (identical rows tie harmlessly).
+    */
+  private def latestPerKey(batch: DataFrame, key: String,
+      orderCol: String): DataFrame = {
+    val w = Window.partitionBy(key).orderBy(col(orderCol).desc,
+      xxhash64(batch.columns.map(col).toIndexedSeq: _*).asc)
+    batch.withColumn("_graft_rn", row_number().over(w))
+      .filter(col("_graft_rn") === 1).drop("_graft_rn")
+  }
 
   /** Streaming trending top-k: event-time windowed counts per key, with
-    * each CLOSED window's top-k keys appended to a parquet table — the
+    * each CLOSED window's top-k keys written to a parquet table — the
     * "trending categories this hour" pipeline over an event stream.
     * The windowed count runs in the streaming engine (watermarked,
     * append mode = each window emitted exactly once, after it closes);
     * ranking runs per micro-batch of closed windows through the custom
     * bounded-heap [[graft.plans.GroupTopK]] operator, so the key space
     * of a window is never fully sorted — the same contract that makes
-    * the batch operator safe at 100 TB keys.
+    * the batch operator safe at 100 TB keys. Each batch publishes to
+    * `outPath/batch=<id>` (a replay rewrites it), so readers see a
+    * `batch` partition column.
     */
   def trendingTopK(events: DataFrame, timeCol: String, keyCol: String,
       windowDur: String, watermarkDelay: String, k: Int,
@@ -199,18 +289,13 @@ object Pipelines {
       .agg(count(lit(1)).as("cnt"))
       .select(col("window.start").as("w_start"), col("window.end").as("w_end"),
         col(keyCol), col("cnt"))
-    counts.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
+    eachBatch(counts, checkpoint, OutputMode.Append) { (batch, batchId) =>
+      if (!batch.isEmpty)
+        Publish(s"$outPath/batch=$batchId")(
           graft.api.Windows.topKPerGroup(batch, Seq("w_start"),
-              Seq(("cnt", true), (keyCol, false)), k)
-            .write.mode("append").parquet(outPath)
-        }
-        ()
-      }
+            Seq(("cnt", true), (keyCol, false)), k)
+            .write.mode("overwrite").parquet(_))
+    }
   }
 
   /** Streaming histogram quantiles — the streaming twin of the r40
@@ -222,7 +307,8 @@ object Pipelines {
     * through [[graft.api.Windows.histogramQuantiles]] — the same
     * read-off the batch query uses, so the two cannot silently
     * diverge. Output: (w_start, q, n, est) parquet rows, one per
-    * closed window and quantile.
+    * closed window and quantile, published per batch to
+    * `outPath/batch=<id>` like [[trendingTopK]].
     */
   def windowedHistQuantiles(events: DataFrame, timeCol: String,
       valueCol: String, windowDur: String, watermarkDelay: String,
@@ -236,18 +322,13 @@ object Pipelines {
       .agg(count(lit(1)).as("_cnt"))
       .select(col("window.start").as("w_start"),
         col("_bucket"), col("_cnt"))
-    hist.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
+    eachBatch(hist, checkpoint, OutputMode.Append) { (batch, batchId) =>
+      if (!batch.isEmpty)
+        Publish(s"$outPath/batch=$batchId")(
           graft.api.Windows.histogramQuantiles(batch, Seq("w_start"),
-              "_bucket", "_cnt", qs, bucketWidth)
-            .write.mode("append").parquet(outPath)
-        }
-        ()
-      }
+            "_bucket", "_cnt", qs, bucketWidth)
+            .write.mode("overwrite").parquet(_))
+    }
   }
 
   /** Zone-mapped streaming sink: each micro-batch lands time-clustered
@@ -280,32 +361,24 @@ object Pipelines {
   def zoneMappedSink(events: DataFrame, tablePath: String,
       checkpoint: String, tsCol: String,
       filesPerBatch: Int = 4): DataStreamWriter[Row] =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val dataDir = s"$tablePath/batch=$batchId"
-          Publish(dataDir) { staged =>
-            batch.repartitionByRange(filesPerBatch, col(tsCol))
-              .sortWithinPartitions(tsCol)
-              .write.mode("overwrite").parquet(staged)
-            // the part files by glob: the dot-named staging dir itself
-            // is a hidden path that Spark warns about as a read root
-            graft.io.ZoneMap.stats(spark, s"$staged/*.parquet", tsCol)
-              .withColumn("file",
-                // literal (non-regex) substring replace: staged path ->
-                // the path the file will have once the rename publishes
-                org.apache.spark.sql.functions.expr(
-                  s"replace(file, '$staged', '$dataDir')"))
-              .coalesce(1)
-              .write.mode("overwrite").parquet(s"$staged/_zonemap")
-          }
+    eachBatch(events, checkpoint, OutputMode.Append) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val dataDir = s"$tablePath/batch=$batchId"
+        Publish(dataDir) { staged =>
+          batch.repartitionByRange(filesPerBatch, col(tsCol))
+            .sortWithinPartitions(tsCol)
+            .write.mode("overwrite").parquet(staged)
+          // the part files by glob: the dot-named staging dir itself
+          // is a hidden path that Spark warns about as a read root
+          graft.io.ZoneMap.stats(batch.sparkSession, s"$staged/*.parquet", tsCol)
+            // literal (non-regex) substring replace: staged path ->
+            // the path the file will have once the rename publishes
+            .withColumn("file", expr(s"replace(file, '$staged', '$dataDir')"))
+            .coalesce(1)
+            .write.mode("overwrite").parquet(s"$staged/_zonemap")
         }
-        ()
       }
+    }
 
   /** Streaming MERGE sink: every micro-batch is applied to a parquet
     * table as an upsert (`MERGE INTO` from a stream — the Delta
@@ -313,66 +386,39 @@ object Pipelines {
     * several updates for one key collapse to the latest by `orderCol`
     * BEFORE the merge ([[graft.api.Tables.upsert]] requires unique
     * update keys — at-least-once sources redeliver). The merged table
-    * is staged and published by [[graft.io.Publish]], so a crash at
-    * ANY point — including between its two renames — leaves a
-    * recoverable table on disk.
+    * goes through the crash-safe `foldTable`, so a crash at ANY point
+    * — including between its two renames — leaves a recoverable table
+    * on disk, and a replayed batch re-applies an idempotent merge.
     *
     * At scale the read-merge-rewrite becomes a real table format's
     * MERGE (Delta/Iceberg) — this sink IS that call site: swap the
-    * body of the `foreachBatch` for `deltaTable.merge(...)` and
-    * nothing upstream changes.
+    * merge for `deltaTable.merge(...)` and nothing upstream changes.
     */
   def upsertSink(updates: DataFrame, tablePath: String, checkpoint: String,
       key: String, orderCol: String): DataStreamWriter[Row] =
-    updates.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(upsertBatch(tablePath, key, orderCol))
+    upsert(updates, tablePath, checkpoint, key, orderCol, OutputMode.Append)
 
   /** [[upsertSink]] for UPDATE-mode upstreams — the sink for custom
     * keyed state (`flatMapGroupsWithState` emits one cumulative row
     * per touched key per micro-batch, which is update-mode output by
     * definition and rejected by an append-mode writer). The merge
-    * body is identical: collapse the batch to the latest row per key
-    * by `orderCol`, MERGE into the parquet table, publish by the
-    * crash-safe two-rename swap. For a state op whose per-key output
-    * is monotone in `orderCol` (counts, cumulative sums), replay
+    * body is identical. For a state op whose per-key output is
+    * monotone in `orderCol` (counts, cumulative sums), replay
     * redelivery is absorbed exactly as in [[upsertSink]]: the stored
     * row already carries an equal-or-later `orderCol`.
     */
   def stateUpsertSink(updates: DataFrame, tablePath: String,
       checkpoint: String, key: String, orderCol: String)
       : DataStreamWriter[Row] =
-    updates.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(upsertBatch(tablePath, key, orderCol))
+    upsert(updates, tablePath, checkpoint, key, orderCol, OutputMode.Update)
 
-  private def upsertBatch(tablePath: String, key: String, orderCol: String)
-      : (org.apache.spark.sql.Dataset[Row], Long) => Unit =
-    (batch: org.apache.spark.sql.Dataset[Row], _: Long) => {
-      val spark = batch.sparkSession
-      // tie-break beyond orderCol with a full-row hash: two updates
-      // for one key carrying the SAME orderCol but different payloads
-      // would otherwise be picked arbitrarily per run — a replay could
-      // then publish a different row than the original epoch did. The
-      // hash is a pure function of the row, so replays pick
-      // identically (identical rows tie harmlessly).
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(key).orderBy(col(orderCol).desc,
-          xxhash64(batch.columns.map(col).toIndexedSeq: _*).asc)
-      val latest = batch
-        .withColumn("_graft_rn", row_number().over(w))
-        .filter(col("_graft_rn") === 1).drop("_graft_rn")
-      Publish.recover(tablePath)
-      val merged =
-        if (hasParts(tablePath))
-          graft.api.Tables.upsert(spark.read.parquet(tablePath), latest, key)
-        else latest
-      Publish(tablePath)(merged.write.mode("overwrite").parquet(_))
-      ()
+  private def upsert(updates: DataFrame, tablePath: String,
+      checkpoint: String, key: String, orderCol: String, mode: OutputMode)
+      : DataStreamWriter[Row] =
+    eachBatch(updates, checkpoint, mode) { (batch, _) =>
+      val latest = latestPerKey(batch, key, orderCol)
+      foldTable(batch.sparkSession, tablePath)(
+        _.fold(latest)(graft.api.Tables.upsert(_, latest, key)))
     }
 
   /** Streaming A/B EXPOSURE/CONVERSION state fold — the incremental
@@ -393,8 +439,7 @@ object Pipelines {
     * final first-view time, so the fold lands exactly on the batch
     * answer. Replay-idempotent: re-applying a committed batch
     * recomputes the same `min` and re-checks the same purchases
-    * against the same `v_us` (publish via the two-rename swap,
-    * recover on entry).
+    * against the same `v_us`.
     *
     * Input columns: `user_id long, event_type string, us long`
     * (event time in epoch-µs). State table: `user_id, v_us, conv`.
@@ -402,49 +447,8 @@ object Pipelines {
   def abExposureSink(events: DataFrame, tablePath: String,
       checkpoint: String, windowUs: Long = 604800000000L)
       : DataStreamWriter[Row] =
-    events.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.persist()
-        val waveV = b.filter(col("event_type") === "view")
-          .groupBy("user_id").agg(min(col("us")).as("wv"))
-        val waveP = b.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("us").as("pus"))
-        Publish.recover(tablePath)
-        val old =
-          if (hasParts(tablePath)) spark.read.parquet(tablePath)
-          else spark.createDataFrame(
-            new java.util.ArrayList[Row](),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("user_id",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("v_us",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("conv",
-                org.apache.spark.sql.types.LongType))))
-        // merged exposure time: min over stored and in-batch views;
-        // users with neither stay out of the state entirely
-        val exposed = old.join(waveV, Seq("user_id"), "full_outer")
-          .select(col("user_id"),
-            coalesce(least(col("v_us"), col("wv")), col("v_us"), col("wv"))
-              .as("v_us"),
-            coalesce(col("conv"), lit(0L)).as("conv"))
-          .filter(col("v_us").isNotNull)
-        val qual = waveP.join(exposed.select("user_id", "v_us"), "user_id")
-          .filter(col("pus") > col("v_us") &&
-            col("pus") <= col("v_us") + lit(windowUs))
-          .select("user_id").distinct()
-          .withColumn("q", lit(1L))
-        val merged = exposed.join(qual, Seq("user_id"), "left")
-          .select(col("user_id"), col("v_us"),
-            greatest(col("conv"), coalesce(col("q"), lit(0L))).as("conv"))
-        Publish(tablePath)(merged.write.mode("overwrite").parquet(_))
-        b.unpersist()
-        ()
-      }
+    exposureSink(events, tablePath, checkpoint, windowUs, "conv", lit(1L),
+      (c, q) => coalesce(greatest(c, q), lit(0L)))
 
   /** Streaming GROUP-SEQUENTIAL state fold — [[abExposureSink]]'s
     * conversion-TIME generalization, the state layer of the qs29
@@ -457,60 +461,51 @@ object Pipelines {
     * registers are MIN-monoids (min is commutative, associative,
     * idempotent), so the fold is batching-invariant by algebra under
     * the same cross-batch event-time-order contract as
-    * abExposureSink (`v_us` fixes at first exposure; each batch's
-    * purchases are checked against the merged `v_us`), and replaying
-    * a committed batch re-derives the same mins — publish via the
-    * two-rename swap, recover on entry. The group-sequential look
-    * table itself is a pure READ-time function over this state
+    * abExposureSink, and replaying a committed batch re-derives the
+    * same mins. The group-sequential look table itself is a pure
+    * READ-time function over this state
     * ([[graft.ops.EventOps.gstLooks]]), the qs17/qs25/qs27/qs28
     * register-file discipline.
     */
   def gstStateSink(events: DataFrame, tablePath: String,
       checkpoint: String, windowUs: Long = 604800000000L)
       : DataStreamWriter[Row] =
-    events.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.persist()
-        val waveV = b.filter(col("event_type") === "view")
-          .groupBy("user_id").agg(min(col("us")).as("wv"))
-        val waveP = b.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("us").as("pus"))
-        Publish.recover(tablePath)
-        val old =
-          if (hasParts(tablePath)) spark.read.parquet(tablePath)
-          else spark.createDataFrame(
-            new java.util.ArrayList[Row](),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("user_id",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("v_us",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("conv_us",
-                org.apache.spark.sql.types.LongType))))
-        val exposed = old.join(waveV, Seq("user_id"), "full_outer")
-          .select(col("user_id"),
-            coalesce(least(col("v_us"), col("wv")), col("v_us"), col("wv"))
-              .as("v_us"),
-            col("conv_us"))
+    exposureSink(events, tablePath, checkpoint, windowUs, "conv_us",
+      col("pus"), least(_, _))
+
+  /** The exposure fold [[abExposureSink]] and [[gstStateSink]] share.
+    * They differ only in the conversion register `conv`: each batch
+    * reduces its qualifying purchases per user to `min(hit)`, and
+    * `merge(stored, batch)` folds that into the stored register.
+    */
+  private def exposureSink(events: DataFrame, tablePath: String,
+      checkpoint: String, windowUs: Long, conv: String, hit: Column,
+      merge: (Column, Column) => Column): DataStreamWriter[Row] =
+    eachBatch(events, checkpoint, OutputMode.Update) { (batch, _) =>
+      val b = batch.persist()
+      val views = b.filter(col("event_type") === "view")
+        .groupBy("user_id").agg(min(col("us")).as("wv"))
+      val buys = b.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("us").as("pus"))
+      foldTable(b.sparkSession, tablePath) { state =>
+        // merged exposure time: min over stored and in-batch views
+        // (least skips NULLs); users with neither stay out of the state
+        val exposed = state.fold(views.select(col("user_id"),
+            col("wv").as("v_us"), lit(null).cast("bigint").as(conv)))(
+          _.join(views, Seq("user_id"), "full_outer")
+            .select(col("user_id"), least(col("v_us"), col("wv")).as("v_us"),
+              col(conv)))
           .filter(col("v_us").isNotNull)
-        // this batch's qualifying conversions, reduced to the user's
-        // earliest — then min-merged with the stored register
-        val qual = waveP.join(exposed.select("user_id", "v_us"), "user_id")
+        val qual = buys.join(exposed.select("user_id", "v_us"), "user_id")
           .filter(col("pus") > col("v_us") &&
             col("pus") <= col("v_us") + lit(windowUs))
-          .groupBy("user_id").agg(min(col("pus")).as("q_us"))
-        val merged = exposed.join(qual, Seq("user_id"), "left")
+          .groupBy("user_id").agg(min(hit).as("q"))
+        exposed.join(qual, Seq("user_id"), "left")
           .select(col("user_id"), col("v_us"),
-            coalesce(least(col("conv_us"), col("q_us")),
-              col("conv_us"), col("q_us")).as("conv_us"))
-        Publish(tablePath)(merged.write.mode("overwrite").parquet(_))
-        b.unpersist()
-        ()
+            merge(col(conv), col("q")).as(conv))
       }
+      b.unpersist()
+    }
 
   /** Streaming content-addressed chunk store — the WRITE path of m11's
     * chunk-level dedup: each micro-batch of binary payloads is split
@@ -518,35 +513,23 @@ object Pipelines {
     * anti-joined against the accumulated store on the chunk md5, and
     * only NOVEL chunks are admitted — so storage grows by content the
     * lake has never seen, no matter how often payloads repeat across
-    * batches. Published by [[graft.io.Publish]] (its two-rename swap —
-    * the cumulative store is the case where the naive delete+rename
-    * window is outright data loss, since committed batches are never
-    * redelivered), and idempotent under replay by construction: a
-    * redelivered batch's chunks are already in the store, so its novel
-    * set is empty. On an object store this body becomes a table-format
-    * MERGE keyed on the chunk hash.
+    * batches. Goes through the crash-safe `foldTable` (the cumulative
+    * store is the case where a naive delete+rename window is outright
+    * data loss, since committed batches are never redelivered), and
+    * idempotent under replay by construction: a redelivered batch's
+    * chunks are already in the store, so its novel set is empty. On an
+    * object store this body becomes a table-format MERGE keyed on the
+    * chunk hash.
     */
   def chunkStoreSink(media: DataFrame, storePath: String, checkpoint: String,
-      chunkBytes: Int = 64): DataStreamWriter[Row] = {
-    media.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val novel = graft.ops.Multimodal.payloadChunks(batch.toDF(), chunkBytes)
-          .select("h", "len").dropDuplicates("h")
-        Publish.recover(storePath)
-        val merged =
-          if (hasParts(storePath)) {
-            val existing = spark.read.parquet(storePath)
-            existing.unionByName(
-              novel.join(existing.select(col("h")), Seq("h"), "left_anti"))
-          } else novel
-        Publish(storePath)(merged.write.mode("overwrite").parquet(_))
-        ()
-      }
-  }
+      chunkBytes: Int = 64): DataStreamWriter[Row] =
+    eachBatch(media, checkpoint, OutputMode.Append) { (batch, _) =>
+      val novel = graft.ops.Multimodal.payloadChunks(batch.toDF(), chunkBytes)
+        .select("h", "len").dropDuplicates("h")
+      foldTable(batch.sparkSession, storePath)(_.fold(novel)(store =>
+        store.unionByName(
+          novel.join(store.select(col("h")), Seq("h"), "left_anti"))))
+    }
 
   /** Streaming near-dup ADMISSION GATE — the keep-the-corpus-fresh
     * composition of the d09 incremental-dedup contract with the
@@ -589,52 +572,45 @@ object Pipelines {
   def dedupGateSink(docs: DataFrame, corpusIndexPath: String,
       deltaIndexPath: String, decisionsPath: String, checkpoint: String,
       threshold: Double = 0.5): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        // base ∪ delta, reading the delta leg only once it has data —
-        // the base stays an immutable shared artifact (never copied,
-        // never rewritten); only this gate's own admissions live in
-        // the per-run delta
-        def indexSide(sub: String): DataFrame = {
-          val base = spark.read.parquet(s"$corpusIndexPath/$sub")
-          if (hasParts(s"$deltaIndexPath/$sub"))
-            base.unionByName(spark.read.parquet(s"$deltaIndexPath/$sub"))
-          else base
-        }
-        // smallest indexed near-dup per incoming doc; persisted because
-        // both the decision write and the admitted anti-join consume it.
-        // The tracked variant returns the probe's own internal caches
-        // (the batch shingle frame) so the sink can unpersist EXACTLY
-        // what this batch persisted — diffing the session-global
-        // persisted-RDD set here could evict a concurrently running
-        // query's fresh caches on the shared SparkSession.
-        val (probe, probeCaches) = graft.api.Dedup.incrementalNearDupsTracked(
-          batch.toDF(), indexSide("shingles"), indexSide("sig"),
-          threshold = threshold)
-        val dups = probe
-          .groupBy("doc_new").agg(min("doc_dup").as("dup_of"))
-          .persist()
-        batch.toDF().select(col("doc_id"))
-          .join(dups, col("doc_id") === col("doc_new"), "left_outer")
-          .select(col("doc_id"),
-            when(col("dup_of").isNull, 1).otherwise(0).cast("int")
-              .as("admitted"),
-            coalesce(col("dup_of"), lit(-1L)).as("dup_of"))
-          .write.mode("append").parquet(decisionsPath)
-        val admitted = batch.toDF().join(
-          dups.select(col("doc_new").as("doc_id")), Seq("doc_id"),
-          "left_anti")
-        val (ashs, asig) = graft.api.Dedup.incrementalCorpusIndex(admitted)
-        ashs.write.mode("append").parquet(s"$deltaIndexPath/shingles")
-        asig.write.mode("append").parquet(s"$deltaIndexPath/sig")
-        dups.unpersist()
-        probeCaches.foreach(_.unpersist(blocking = false))
-        ()
+    eachBatch(docs, checkpoint, OutputMode.Append) { (batch, _) =>
+      val spark = batch.sparkSession
+      // base ∪ delta, reading the delta leg only once it has data —
+      // the base stays an immutable shared artifact (never copied,
+      // never rewritten); only this gate's own admissions live in
+      // the per-run delta
+      def indexSide(sub: String): DataFrame = {
+        val base = spark.read.parquet(s"$corpusIndexPath/$sub")
+        stored(spark, s"$deltaIndexPath/$sub").fold(base)(base.unionByName(_))
       }
+      // smallest indexed near-dup per incoming doc; persisted because
+      // both the decision write and the admitted anti-join consume it.
+      // The tracked variant returns the probe's own internal caches
+      // (the batch shingle frame) so the sink can unpersist EXACTLY
+      // what this batch persisted — diffing the session-global
+      // persisted-RDD set here could evict a concurrently running
+      // query's fresh caches on the shared SparkSession.
+      val (probe, probeCaches) = graft.api.Dedup.incrementalNearDupsTracked(
+        batch, indexSide("shingles"), indexSide("sig"),
+        threshold = threshold)
+      val dups = probe
+        .groupBy("doc_new").agg(min("doc_dup").as("dup_of"))
+        .persist()
+      batch.select(col("doc_id"))
+        .join(dups, col("doc_id") === col("doc_new"), "left_outer")
+        .select(col("doc_id"),
+          when(col("dup_of").isNull, 1).otherwise(0).cast("int")
+            .as("admitted"),
+          coalesce(col("dup_of"), lit(-1L)).as("dup_of"))
+        .write.mode("append").parquet(decisionsPath)
+      val admitted = batch.join(
+        dups.select(col("doc_new").as("doc_id")), Seq("doc_id"),
+        "left_anti")
+      val (ashs, asig) = graft.api.Dedup.incrementalCorpusIndex(admitted)
+      ashs.write.mode("append").parquet(s"$deltaIndexPath/shingles")
+      asig.write.mode("append").parquet(s"$deltaIndexPath/sig")
+      dups.unpersist()
+      probeCaches.foreach(_.unpersist(blocking = false))
+    }
 
   /** Streaming FIRST-MATCH ROUTER sink — the triage shape every ingest
     * gate ends in: one pass over each micro-batch fans rows out to one
@@ -665,34 +641,29 @@ object Pipelines {
     */
   def routedSink(df: DataFrame, routes: Seq[(String, Column)],
       basePath: String, checkpoint: String): DataStreamWriter[Row] =
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val b = batch.toDF().persist()
-        // a NULL predicate must mean "did not match", not "vanish":
-        // un-coalesced, filter(pred) drops the row from its own route
-        // AND the !pred guards stay NULL for every later route and the
-        // dead-letter fold — the row would land nowhere, breaking the
-        // unmatched-rows-always-reach-dead_letter contract (e.g. a
-        // nullable score column). Coalesce each predicate to false.
-        val preds = routes.map { case (n, p) => n -> coalesce(p, lit(false)) }
-        val guarded = preds.zipWithIndex.map { case ((name, pred), i) =>
-          name -> preds.take(i).map(_._2)
-            .foldLeft(pred)((p, earlier) => p && !earlier)
-        }
-        val dead = preds.map(_._2)
-          .foldLeft(lit(true))((p, r) => p && !r)
-        (guarded :+ ("dead_letter" -> dead)).foreach { case (name, pred) =>
-          val rows = b.filter(pred)
-          if (!rows.isEmpty)
-            rows.write.mode("overwrite")
-              .parquet(s"$basePath/$name/batch=$batchId")
-        }
-        b.unpersist()
-        ()
+    eachBatch(df, checkpoint, OutputMode.Append) { (batch, batchId) =>
+      val b = batch.persist()
+      // a NULL predicate must mean "did not match", not "vanish":
+      // un-coalesced, filter(pred) drops the row from its own route
+      // AND the !pred guards stay NULL for every later route and the
+      // dead-letter fold — the row would land nowhere, breaking the
+      // unmatched-rows-always-reach-dead_letter contract (e.g. a
+      // nullable score column). Coalesce each predicate to false.
+      val preds = routes.map { case (n, p) => n -> coalesce(p, lit(false)) }
+      val guarded = preds.zipWithIndex.map { case ((name, pred), i) =>
+        name -> preds.take(i).map(_._2)
+          .foldLeft(pred)((p, earlier) => p && !earlier)
       }
+      val dead = preds.map(_._2)
+        .foldLeft(lit(true))((p, r) => p && !r)
+      (guarded :+ ("dead_letter" -> dead)).foreach { case (name, pred) =>
+        val rows = b.filter(pred)
+        if (!rows.isEmpty)
+          rows.write.mode("overwrite")
+            .parquet(s"$basePath/$name/batch=$batchId")
+      }
+      b.unpersist()
+    }
 
   /** Streaming CDC apply sink — [[upsertSink]] completed with the
     * DELETE branch: the stream carries Debezium-shaped row images
@@ -700,41 +671,21 @@ object Pipelines {
     * to the latest change per key by `orderCol` (at-least-once sources
     * redeliver; a later delete beats an earlier update and vice
     * versa), and [[graft.api.Tables.applyCdc]] merges it into the
-    * parquet table — published by [[graft.io.Publish]], so a
-    * crash mid-write leaves the previous table intact. The table holds
-    * the data columns only; op/order are consumed by the merge. On
+    * parquet table through the crash-safe `foldTable`, so a crash
+    * mid-write leaves the previous table intact. The table holds the
+    * data columns only; op/order are consumed by the merge. On
     * Delta/Iceberg this body becomes `MERGE ... WHEN MATCHED AND
     * op='D' THEN DELETE`, and nothing upstream changes.
     */
   def cdcSink(changes: DataFrame, tablePath: String, checkpoint: String,
       key: String, orderCol: String, opCol: String = "op")
-      : DataStreamWriter[Row] = {
-    changes.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        // full-row-hash tie-break past orderCol — same replay-stability
-        // argument as upsertBatch (a tied U/D pair for one key must
-        // resolve identically on the replayed epoch)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(key).orderBy(col(orderCol).desc,
-            xxhash64(batch.columns.map(col).toIndexedSeq: _*).asc)
-        val latest = batch
-          .withColumn("_graft_rn", row_number().over(w))
-          .filter(col("_graft_rn") === 1)
-          .drop("_graft_rn", orderCol)
-        Publish.recover(tablePath)
-        val merged =
-          if (hasParts(tablePath))
-            graft.api.Tables.applyCdc(spark.read.parquet(tablePath), latest,
-              key, opCol)
-          else latest.filter(col(opCol) =!= "D").drop(opCol)
-        Publish(tablePath)(merged.write.mode("overwrite").parquet(_))
-        ()
-      }
-  }
+      : DataStreamWriter[Row] =
+    eachBatch(changes, checkpoint, OutputMode.Append) { (batch, _) =>
+      val latest = latestPerKey(batch, key, orderCol).drop(orderCol)
+      foldTable(batch.sparkSession, tablePath)(
+        _.fold(latest.filter(col(opCol) =!= "D").drop(opCol))(
+          graft.api.Tables.applyCdc(_, latest, key, opCol)))
+    }
 
   /** Fold one micro-batch's aggregate partials into a stored
     * aggregate view — the ADDITIVE merge behind [[aggViewSink]],
@@ -742,85 +693,21 @@ object Pipelines {
     *
     * Unlike [[upsertSink]]'s replace-by-key merge, an additive merge
     * (`n += n_delta`, `s += s_delta`) is NOT naturally idempotent: a
-    * redelivered batch would double-count. The guard is the batch-id
-    * high-water mark committed INSIDE the table directory
-    * (`_LAST_BATCH`, written to the staged dir BEFORE the publish
-    * rename): data and mark move in the same commit, so a batch is
-    * either fully folded in and marked, or neither — a replay with
-    * `batchId <= mark` is a no-op. `partial` must carry
+    * redelivered batch would double-count, so it runs under the
+    * `foldTable` `_LAST_BATCH` guard (a replayed `batchId` equal to the
+    * mark is a no-op; one behind it fails). `partial` must carry
     * `(viewKey, n_rows BIGINT, s DECIMAL(18,2))`; decimal partials
     * keep the merge order-insensitive (the r24/r60 algebra).
     */
-  private[graft] def applyAggViewBatch(
-      spark: org.apache.spark.sql.SparkSession, tablePath: String,
-      partial: DataFrame, viewKey: String, batchId: Long,
-      auditDir: Option[String] = None): Unit = {
-    val lastApplied = lastAppliedBatch(tablePath)
-    def trail(msg: String): Unit = auditDir.foreach { dir =>
-      new java.io.File(dir).mkdirs()
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(dir, "trail.log"),
-        s"batchId=$batchId lastApplied=$lastApplied $msg\n".getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      ()
-    }
-    if (batchId <= lastApplied) { // replayed batch: already folded in
-      trail("action=skipped-replay")
-      return
-    }
-    // Forensic channel (qs4 instrumentation): the folded partial is
-    // persisted under the run root BEFORE the merge, and the fold is
-    // computed FROM that parquet read-back — so what the audit shows is
-    // byte-for-byte what the view absorbed, and a later divergence in
-    // the view is attributable to a specific batch's partial.
-    val foldInput = auditDir.map { dir =>
-      val p = s"$dir/partial_b$batchId"
-      partial.write.mode("overwrite").parquet(p)
-      trail("action=folded")
-      spark.read.parquet(p)
-    }.getOrElse(partial)
-    val merged =
-      if (hasParts(tablePath))
-        spark.read.parquet(tablePath).unionByName(foldInput)
-          .groupBy(viewKey)
-          .agg(sum("n_rows").as("n2"), sum("s").as("s2"))
-          .select(col(viewKey),
-            col("n2").cast("bigint").as("n_rows"),
-            // sums widen decimal precision per merge round; renormalize
-            // on store so the view schema is a fixpoint
-            col("s2").cast("decimal(18,2)").as("s"))
-      else foldInput
-    publishMarked(tablePath, merged, batchId)
-    // (no per-batch view snapshot: the fold is a pure function of the
-    // audited partials + the prior view, so partials + trail +
-    // _LAST_BATCH reconstruct every intermediate state)
-    ()
-  }
-
-  /** The `_LAST_BATCH` high-water mark of a view table (-1 when there
-    * is none yet), read after recovering a crash between the publish
-    * renames.
-    */
-  private def lastAppliedBatch(tablePath: String): Long = {
-    Publish.recover(tablePath)
-    val mark = java.nio.file.Paths.get(tablePath, "_LAST_BATCH")
-    if (java.nio.file.Files.exists(mark))
-      java.nio.file.Files.readString(mark).trim.toLong
-    else -1L
-  }
-
-  /** Publish a view table with `batchId` as its `_LAST_BATCH` mark,
-    * written into the staged copy so data and mark move in one commit.
-    */
-  private def publishMarked(tablePath: String, merged: DataFrame,
+  private[graft] def applyAggViewBatch(spark: SparkSession,
+      tablePath: String, partial: DataFrame, viewKey: String,
       batchId: Long): Unit =
-    Publish(tablePath) { staged =>
-      merged.write.mode("overwrite").parquet(staged)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(staged, "_LAST_BATCH"), batchId.toString)
-      ()
-    }
+    foldTable(spark, tablePath, Some(batchId))(_.fold(partial)(
+      _.unionByName(partial).groupBy(viewKey)
+        .agg(sum("n_rows").cast("bigint").as("n_rows"),
+          // sums widen decimal precision per merge round; renormalize
+          // on store so the view schema is a fixpoint
+          sum("s").cast("decimal(18,2)").as("s"))))
 
   /** MIN-monoid view sink — [[aggViewSink]]'s fold machinery with a
     * min-merge: each micro-batch reduces to per-`viewKey` minima of
@@ -829,45 +716,32 @@ object Pipelines {
     * a `flatMapGroupsWithState` register fold cannot get), and the
     * stored view folds by `least(stored, partial)`. Min is
     * commutative, associative AND idempotent, so the fold is
-    * batching-invariant by algebra; the batch-id high-water mark is
-    * still committed with the data ([[applyMinViewBatch]]) so replays
-    * are structurally no-ops, same as every other view sink. This is
-    * the sketch sink for MinHash-style signatures: the view IS the
+    * batching-invariant by algebra; the batch-id mark is still
+    * committed with the data ([[applyMinViewBatch]]) so replays are
+    * structurally no-ops, same as every other view sink. This is the
+    * sketch sink for MinHash-style signatures: the view IS the
     * signature register file, constant-size at any stream length.
     */
   def minViewSink(facts: DataFrame, tablePath: String,
       checkpoint: String, viewKey: String, valueCol: String)
       : DataStreamWriter[Row] =
-    facts.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val partial = batch.groupBy(viewKey)
-          .agg(min(col(valueCol)).cast("bigint").as("register"))
-        applyMinViewBatch(batch.sparkSession, tablePath, partial,
-          viewKey, batchId)
-      }
+    eachBatch(facts, checkpoint, OutputMode.Append) { (batch, batchId) =>
+      applyMinViewBatch(batch.sparkSession, tablePath,
+        batch.groupBy(viewKey)
+          .agg(min(col(valueCol)).cast("bigint").as("register")),
+        viewKey, batchId)
+    }
 
-  /** [[applyAggViewBatch]]'s publish/replay protocol with a min-merge
-    * fold — staged write, atomic publish, `_LAST_BATCH` high-water
-    * mark; a replayed `batchId <= mark` is a no-op (and would be
-    * value-harmless anyway: min is idempotent).
+  /** [[applyAggViewBatch]] with a min-merge: a replayed `batchId` equal
+    * to the `_LAST_BATCH` mark is a no-op (and would be value-harmless
+    * anyway: min is idempotent).
     */
-  private[graft] def applyMinViewBatch(
-      spark: org.apache.spark.sql.SparkSession, tablePath: String,
-      partial: DataFrame, viewKey: String, batchId: Long): Unit = {
-    val lastApplied = lastAppliedBatch(tablePath)
-    if (batchId <= lastApplied) return // replayed batch: already folded
-    val merged =
-      if (hasParts(tablePath))
-        spark.read.parquet(tablePath).unionByName(partial)
-          .groupBy(viewKey)
-          .agg(min("register").cast("bigint").as("register"))
-      else partial
-    publishMarked(tablePath, merged, batchId)
-    ()
-  }
+  private[graft] def applyMinViewBatch(spark: SparkSession,
+      tablePath: String, partial: DataFrame, viewKey: String,
+      batchId: Long): Unit =
+    foldTable(spark, tablePath, Some(batchId))(_.fold(partial)(
+      _.unionByName(partial).groupBy(viewKey)
+        .agg(min("register").cast("bigint").as("register"))))
 
   /** Streaming incremental aggregate-view maintenance — the streaming
     * twin of the r60 batch query: each micro-batch of fact rows is
@@ -879,28 +753,21 @@ object Pipelines {
     * join-derived dimension key, which is exactly what plain streaming
     * aggregation state cannot give without carrying the join in state;
     * here the join happens per micro-batch and only k groups persist.
-    * Replays are no-ops via the batch-id high-water mark committed
-    * with the data.
+    * Replays are no-ops via the `_LAST_BATCH` mark committed with the
+    * data.
     */
   def aggViewSink(facts: DataFrame, dim: DataFrame, tablePath: String,
       checkpoint: String, joinKey: String, viewKey: String,
-      valueCol: String, auditDir: Option[String] = None)
-      : DataStreamWriter[Row] = {
-    facts.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val partial = batch
-          .join(broadcast(dim), batch(joinKey) === dim(joinKey))
+      valueCol: String): DataStreamWriter[Row] =
+    eachBatch(facts, checkpoint, OutputMode.Append) { (batch, batchId) =>
+      applyAggViewBatch(batch.sparkSession, tablePath,
+        batch.join(broadcast(dim), batch(joinKey) === dim(joinKey))
           .groupBy(viewKey)
           .agg(count(lit(1)).cast("bigint").as("n_rows"),
             sum(col(valueCol).cast("decimal(18,2)"))
-              .cast("decimal(18,2)").as("s"))
-        applyAggViewBatch(batch.sparkSession, tablePath, partial,
-          viewKey, batchId, auditDir)
-      }
-  }
+              .cast("decimal(18,2)").as("s")),
+        viewKey, batchId)
+    }
 
   /** Stream-stream interval join: left rows matched to right rows with
     * the same `key` whose event time falls in
@@ -941,15 +808,14 @@ object Pipelines {
     * axis (SURVEY.md §2.9) that windowed aggregation can't express
     * (state survives forever, one update row per key per batch).
     */
-  def runningUserTotals(events: org.apache.spark.sql.Dataset[UserEvent])
-      : org.apache.spark.sql.Dataset[UserUpdate] = {
+  def runningUserTotals(events: Dataset[UserEvent])
+      : Dataset[UserUpdate] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[UserState, UserUpdate](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[UserEvent], state: org.apache.spark.sql.streaming.GroupState[UserState]) =>
+        (uid: Long, it: Iterator[UserEvent], state: GroupState[UserState]) =>
           val prev = state.getOption.getOrElse(UserState(0L, 0.0))
           var n = prev.n
           var tot = prev.total
@@ -974,15 +840,14 @@ object Pipelines {
     * rank over the user frame, which a feature store recomputes on
     * read, not on ingest.
     */
-  def rfmFeatures(events: org.apache.spark.sql.Dataset[PurchaseEvent])
-      : org.apache.spark.sql.Dataset[RfmUpdate] = {
+  def rfmFeatures(events: Dataset[PurchaseEvent])
+      : Dataset[RfmUpdate] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[RfmState, RfmUpdate](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[PurchaseEvent], state: org.apache.spark.sql.streaming.GroupState[RfmState]) =>
+        (uid: Long, it: Iterator[PurchaseEvent], state: GroupState[RfmState]) =>
           val prev = state.getOption.getOrElse(RfmState(Long.MinValue, 0L, 0L))
           var last = prev.last_us
           var n = prev.freq
@@ -1023,15 +888,14 @@ object Pipelines {
     * sketch IS the state, a few hundred bytes per type at any stream
     * length.
     */
-  def hllRegisters(events: org.apache.spark.sql.Dataset[TypedHash])
-      : org.apache.spark.sql.Dataset[HllRegUpdate] = {
+  def hllRegisters(events: Dataset[TypedHash])
+      : Dataset[HllRegUpdate] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     events
       .groupByKey(_.event_type)
       .flatMapGroupsWithState[HllRegsState, HllRegUpdate](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (t: String, it: Iterator[TypedHash], state: org.apache.spark.sql.streaming.GroupState[HllRegsState]) =>
+        (t: String, it: Iterator[TypedHash], state: GroupState[HllRegsState]) =>
           val regs = state.getOption.map(_.regs.toArray)
             .getOrElse(Array.fill(64)(0))
           it.foreach { e =>
@@ -1091,15 +955,14 @@ object Pipelines {
     * DuckDB oracle re-derive it as a batch as-of under the final
     * watermark.
     */
-  def streamAsOfMatches(events: org.apache.spark.sql.Dataset[SAsOfEvent],
-      tolUs: Long): org.apache.spark.sql.Dataset[SAsOfMatch] = {
+  def streamAsOfMatches(events: Dataset[SAsOfEvent],
+      tolUs: Long): Dataset[SAsOfMatch] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SAsOfState, SAsOfMatch](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, it: Iterator[SAsOfEvent], state: org.apache.spark.sql.streaming.GroupState[SAsOfState]) =>
+        (uid: Long, it: Iterator[SAsOfEvent], state: GroupState[SAsOfState]) =>
           val prev = state.getOption.getOrElse(SAsOfState(Nil, Nil))
           var clicks = prev.clicks
           var pending = prev.pending
@@ -1147,15 +1010,14 @@ object Pipelines {
     * watermark's job (the funnelStages contract) — a late event would
     * need its two adjacent gaps re-opened, which O(1) state cannot do.
     */
-  def botRegularity(events: org.apache.spark.sql.Dataset[GapEvent])
-      : org.apache.spark.sql.Dataset[GapUpdate] = {
+  def botRegularity(events: Dataset[GapEvent])
+      : Dataset[GapUpdate] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[GapState, GapUpdate](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[GapEvent], state: org.apache.spark.sql.streaming.GroupState[GapState]) =>
+        (uid: Long, it: Iterator[GapEvent], state: GroupState[GapState]) =>
           val prev = state.getOption.getOrElse(GapState(Long.MinValue, 0L, 0L, 0L))
           var last = prev.last_ns
           var n = prev.n; var s1 = prev.s1; var s2 = prev.s2
@@ -1229,15 +1091,14 @@ object Pipelines {
     * caveat as [[funnelStages]]): a right event arriving after a later
     * left was already emitted is not replayed.
     */
-  def streamAsOf(events: org.apache.spark.sql.Dataset[AsOfEvent])
-      : org.apache.spark.sql.Dataset[AsOfMatch] = {
+  def streamAsOf(events: Dataset[AsOfEvent])
+      : Dataset[AsOfMatch] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[(Long, Double), AsOfMatch](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[AsOfEvent], state: org.apache.spark.sql.streaming.GroupState[(Long, Double)]) =>
+        (uid: Long, it: Iterator[AsOfEvent], state: GroupState[(Long, Double)]) =>
           var best = state.getOption
           val out = scala.collection.mutable.ArrayBuffer.empty[AsOfMatch]
           it.toSeq
@@ -1270,17 +1131,16 @@ object Pipelines {
     * order across batches, which is the upstream watermark's job.
     * Aggregate the emitted pairs downstream for the matrix.
     */
-  def transitionPairs(events: org.apache.spark.sql.Dataset[TransEvent])
-      : org.apache.spark.sql.Dataset[Transition] = {
+  def transitionPairs(events: Dataset[TransEvent])
+      : Dataset[Transition] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     // state: (us, event_id, event_type) of the user's latest event
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[(Long, Long, String), Transition](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (uid: Long, it: Iterator[TransEvent],
-            state: org.apache.spark.sql.streaming.GroupState[(Long, Long, String)]) =>
+            state: GroupState[(Long, Long, String)]) =>
           val sorted = it.toSeq.sortBy(e => (e.us, e.event_id))
           val types = state.getOption.map(_._3).toSeq ++ sorted.map(_.event_type)
           sorted.lastOption.foreach(e =>
@@ -1326,12 +1186,11 @@ object Pipelines {
     * evicted docs rather than growing state — the streaming analogue
     * of the batch `maxShingleFreq` cap.
     */
-  def streamNearDups(docs: org.apache.spark.sql.Dataset[StreamDoc],
+  def streamNearDups(docs: Dataset[StreamDoc],
       n: Int = 3, seeds: Int = 8, bandSize: Int = 2,
       minAgree: Int = 4, maxBucket: Int = 64)
-      : org.apache.spark.sql.Dataset[NearDupHit] = {
+      : Dataset[NearDupHit] = {
     import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     val sig = docs.select(col("doc_id"),
       graft.expr.MinHashSig.min_hash_sig(col("text"), n, seeds).as("sig"))
       .filter(col("sig").isNotNull)
@@ -1347,7 +1206,7 @@ object Pipelines {
       .flatMapGroupsWithState[BucketState, NearDupHit](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (bk: String, it: Iterator[BandDoc],
-            state: org.apache.spark.sql.streaming.GroupState[BucketState]) =>
+            state: GroupState[BucketState]) =>
           var entries = state.getOption.map(_.entries.toVector)
             .getOrElse(Vector.empty)
           val out = scala.collection.mutable.ArrayBuffer.empty[NearDupHit]
@@ -1383,16 +1242,15 @@ object Pipelines {
     * replayed micro-batch reproduces identical decisions (exactness
     * across batch splits is pinned by the StreamingSpec test).
     */
-  def keyedQuota(docs: org.apache.spark.sql.Dataset[QuotaDoc], limit: Long)
-      : org.apache.spark.sql.Dataset[QuotaDecision] = {
+  def keyedQuota(docs: Dataset[QuotaDoc], limit: Long)
+      : Dataset[QuotaDecision] = {
     import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     docs
       .groupByKey(_.source)
       .flatMapGroupsWithState[Long, QuotaDecision](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (src: String, it: Iterator[QuotaDoc],
-            state: org.apache.spark.sql.streaming.GroupState[Long]) =>
+            state: GroupState[Long]) =>
           var seen = state.getOption.getOrElse(0L)
           val out = it.toSeq.sortBy(_.doc_id).map { d =>
             seen += 1
@@ -1418,16 +1276,15 @@ object Pipelines {
     * one long per source, like [[keyedQuota]]; within-batch order is
     * pinned by doc_id so replays reproduce identical decisions.
     */
-  def tokenBudget(docs: org.apache.spark.sql.Dataset[BudgetDoc],
-      budget: Long): org.apache.spark.sql.Dataset[BudgetDecision] = {
+  def tokenBudget(docs: Dataset[BudgetDoc],
+      budget: Long): Dataset[BudgetDecision] = {
     import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     docs
       .groupByKey(_.source)
       .flatMapGroupsWithState[Long, BudgetDecision](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (src: String, it: Iterator[BudgetDoc],
-            state: org.apache.spark.sql.streaming.GroupState[Long]) =>
+            state: GroupState[Long]) =>
           var cum = state.getOption.getOrElse(0L)
           val out = it.toSeq.sortBy(_.doc_id).map { d =>
             cum += d.n_tokens
@@ -1459,16 +1316,15 @@ object Pipelines {
     * earlier in-batch) had `us_prior - delayUs > us`, the exact
     * prefix-max rule a flat window re-derives.
     */
-  def lateAudit(events: org.apache.spark.sql.Dataset[TsEvent],
-      delayUs: Long): org.apache.spark.sql.Dataset[LateAuditUpdate] = {
+  def lateAudit(events: Dataset[TsEvent],
+      delayUs: Long): Dataset[LateAuditUpdate] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     events
       .groupByKey(_.event_type)
       .flatMapGroupsWithState[LateState, LateAuditUpdate](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (key: String, it: Iterator[TsEvent],
-            state: org.apache.spark.sql.streaming.GroupState[LateState]) =>
+            state: GroupState[LateState]) =>
           var s = state.getOption.getOrElse(
             LateState(Long.MinValue, 0L, 0L, 0L))
           it.toSeq.sortBy(_.event_id).foreach { e =>
@@ -1503,11 +1359,10 @@ object Pipelines {
     * batch order is pinned by doc_id so replays reproduce identical
     * slots.
     */
-  def streamInterleave(docs: org.apache.spark.sql.Dataset[BatchDoc],
+  def streamInterleave(docs: Dataset[BatchDoc],
       groups: Seq[String], batchSize: Int)
-      : org.apache.spark.sql.Dataset[BatchSlot] = {
+      : Dataset[BatchSlot] = {
     import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     require(groups.nonEmpty && batchSize >= 1,
       s"bad interleave config: $groups / $batchSize")
     val gidx = groups.sorted.zipWithIndex.map { case (g, i) => g -> i.toLong }
@@ -1517,7 +1372,7 @@ object Pipelines {
       .flatMapGroupsWithState[Long, BatchSlot](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (g: String, it: Iterator[BatchDoc],
-            state: org.apache.spark.sql.streaming.GroupState[Long]) =>
+            state: GroupState[Long]) =>
           val base = gidx.getOrElse(g, sys.error(
             s"streamInterleave: group '$g' not in the declared universe " +
               groups.mkString("[", ",", "]")))
@@ -1556,12 +1411,11 @@ object Pipelines {
     * batch split. Within a micro-batch, arrival order is made
     * deterministic by vec_id, so replays reproduce identical output.
     */
-  def streamSemanticDups(vecs: org.apache.spark.sql.Dataset[StreamVec],
+  def streamSemanticDups(vecs: Dataset[StreamVec],
       centroids: Seq[(Long, Array[Double])],
       threshold: Double = 0.9, maxCell: Int = 256)
-      : org.apache.spark.sql.Dataset[SemDupHit] = {
+      : Dataset[SemDupHit] = {
     import vecs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     import graft.expr.VectorExprs.quantizedDotArr
     require(centroids.nonEmpty, "streamSemanticDups needs a codebook")
     val cents = centroids.sortBy(_._1).map { case (cid, cv) =>
@@ -1582,7 +1436,7 @@ object Pipelines {
       .flatMapGroupsWithState[CellVecState, SemDupHit](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (cell: Long, it: Iterator[AssignedVec],
-            state: org.apache.spark.sql.streaming.GroupState[CellVecState]) =>
+            state: GroupState[CellVecState]) =>
           var entries = state.getOption.map(_.entries.toVector)
             .getOrElse(Vector.empty)
           val out = scala.collection.mutable.ArrayBuffer.empty[SemDupHit]
@@ -1602,16 +1456,15 @@ object Pipelines {
       }
   }
 
-  def funnelStages(events: org.apache.spark.sql.Dataset[FunnelEvent],
+  def funnelStages(events: Dataset[FunnelEvent],
       gapUs: Long = 3600000000L)
-      : org.apache.spark.sql.Dataset[FunnelUpdate] = {
+      : Dataset[FunnelUpdate] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[FunnelState, FunnelUpdate](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[FunnelEvent], state: org.apache.spark.sql.streaming.GroupState[FunnelState]) =>
+        (uid: Long, it: Iterator[FunnelEvent], state: GroupState[FunnelState]) =>
           val prev = state.getOption.getOrElse(FunnelState(-1L, -1L, -1L))
           var v = prev.v_us; var c = prev.c_us; var p = prev.p_us
           it.toSeq.sortBy(e => (e.us, e.event_type)).foreach { e =>
@@ -1650,15 +1503,14 @@ object Pipelines {
     * (pa, pb) at merge time, which is also where a production job adds
     * the order-completion timeout that retires basket state.
     */
-  def streamEdges(items: org.apache.spark.sql.Dataset[BasketItem])
-      : org.apache.spark.sql.Dataset[CoEdge] = {
+  def streamEdges(items: Dataset[BasketItem])
+      : Dataset[CoEdge] = {
     import items.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
     items
       .groupByKey(_.order_id)
       .flatMapGroupsWithState[BasketState, CoEdge](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[BasketItem], state: org.apache.spark.sql.streaming.GroupState[BasketState]) =>
+        (_: Long, it: Iterator[BasketItem], state: GroupState[BasketState]) =>
           var known = state.getOption.map(_.parts.toSet)
             .getOrElse(Set.empty[Long])
           val out = scala.collection.mutable.ArrayBuffer.empty[CoEdge]
@@ -1703,80 +1555,67 @@ object Pipelines {
     * Exactly-once under crash and replay, with two artifacts published
     * one at a time by [[graft.io.Publish]] (each crash-safe on its own):
     * the count table at `countPath` holds one row (n_edges BIGINT,
-    * n_triangles BIGINT, batch_id BIGINT) — the totals and the id of
-    * the last batch folded into them — and publishes FIRST; the edge
-    * table at `tablePath` publishes second. A replayed batch that finds
-    * its own (or a later) `batch_id` in the count row has already been
-    * counted, so it only re-publishes the edge table as the pre-batch
-    * edges plus the batch's new ones: a no-op if the first attempt got
-    * that far, the missing half if it crashed between the two
-    * publishes. Otherwise it counts against the edge table on disk,
-    * which is then still the pre-batch table. Either way the totals
-    * equal [[graft.api.Graph.triangleStats]] over the edge table.
+    * n_triangles BIGINT) and goes through the additive fold, so its
+    * `_LAST_BATCH` mark is the last batch counted; it publishes FIRST,
+    * and the edge table at `tablePath` publishes second. A replayed
+    * batch whose id is the mark has already been counted, so it only
+    * re-publishes the edge table as the pre-batch edges plus the
+    * batch's new ones: a no-op if the first attempt got that far, the
+    * missing half if it crashed between the two publishes. Otherwise it
+    * counts against the edge table on disk, which is then still the
+    * pre-batch table. Either way the totals equal
+    * [[graft.api.Graph.triangleStats]] over the edge table.
     */
-  def trianglesSink(edges: org.apache.spark.sql.Dataset[CoEdge],
+  def trianglesSink(edges: Dataset[CoEdge],
       tablePath: String, countPath: String, checkpoint: String)
-      : DataStreamWriter[CoEdge] = {
-    edges.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[CoEdge], batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        Publish.recover(countPath)
-        Publish.recover(tablePath)
-        val canon = batch.toDF()
-          .select(least(col("pa"), col("pb")).as("pa"),
-            greatest(col("pa"), col("pb")).as("pb"))
-          .filter(col("pa") =!= col("pb")).distinct()
-        val old =
-          if (hasParts(tablePath)) spark.read.parquet(tablePath)
-          else Seq.empty[(Long, Long)].toDF("pa", "pb")
-        val (oldEdges, oldTri, lastBatch) =
-          if (hasParts(countPath))
-            spark.read.parquet(countPath)
-              .select("n_edges", "n_triangles", "batch_id")
-              .as[(Long, Long, Long)].head()
-          else (0L, 0L, -1L)
-        val eNew = canon.join(old, Seq("pa", "pb"), "left_anti").persist()
-        if (batchId > lastBatch) {
-          val oldBi = old.select(col("pa").as("u"), col("pb").as("v"))
-            .unionAll(old.select(col("pb").as("u"), col("pa").as("v")))
-          val newBi = eNew.select(col("pa").as("u"), col("pb").as("v"))
-            .unionAll(eNew.select(col("pb").as("u"), col("pa").as("v")))
-          // 1 new edge: common OLD neighbors of each new edge's endpoints
-          val t1 = eNew
-            .join(oldBi.select(col("u").as("pa"), col("v").as("w1")), "pa")
-            .join(oldBi.select(col("u").as("pb"), col("v").as("w2")), "pb")
-            .filter(col("w1") === col("w2"))
-            .agg(count(lit(1)).as("n")).as[Long].head()
-          // 2 new edges: new-new wedge (center c), old closing edge (u<v)
-          val t2 = newBi.select(col("u").as("c"), col("v").as("wu"))
-            .join(newBi.select(col("u").as("c"), col("v").as("wv")), "c")
-            .filter(col("wu") < col("wv"))
-            .join(old.select(col("pa").as("wu"), col("pb").as("wv")),
-              Seq("wu", "wv"), "left_semi")
-            .agg(count(lit(1)).as("n")).as[Long].head()
-          // 3 new edges: census of the batch's new-edge subgraph. Edges
-          // are canonical (a<b), so each triangle a<b<c is exactly one
-          // (a,b)⋈(b,c) path closed by (a,c) — no orientation machinery
-          // needed at delta scale (a huge backfill batch would swap in
-          // the degree-oriented batch kernel here).
-          val t3 = eNew.select(col("pa").as("a"), col("pb").as("b"))
-            .join(eNew.select(col("pa").as("b"), col("pb").as("c")), "b")
-            .join(eNew.select(col("pa").as("a"), col("pb").as("c")),
-              Seq("a", "c"), "left_semi")
-            .agg(count(lit(1)).as("n")).as[Long].head()
-          val row = Seq((oldEdges + eNew.count(), oldTri + t1 + t2 + t3, batchId))
-            .toDF("n_edges", "n_triangles", "batch_id")
-          Publish(countPath)(row.write.mode("overwrite").parquet(_))
-        }
-        Publish(tablePath)(old.unionAll(eNew).write.mode("overwrite").parquet(_))
-        eNew.unpersist()
-        ()
+      : DataStreamWriter[CoEdge] =
+    eachBatch(edges, checkpoint, OutputMode.Append) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      Publish.recover(tablePath)
+      val canon = batch.toDF()
+        .select(least(col("pa"), col("pb")).as("pa"),
+          greatest(col("pa"), col("pb")).as("pb"))
+        .filter(col("pa") =!= col("pb")).distinct()
+      val old = stored(spark, tablePath)
+        .getOrElse(Seq.empty[(Long, Long)].toDF("pa", "pb"))
+      val eNew = canon.join(old, Seq("pa", "pb"), "left_anti").persist()
+      foldTable(spark, countPath, Some(batchId)) { counts =>
+        val (oldEdges, oldTri) = counts.fold((0L, 0L))(
+          _.select("n_edges", "n_triangles").as[(Long, Long)].head())
+        val oldBi = old.select(col("pa").as("u"), col("pb").as("v"))
+          .unionAll(old.select(col("pb").as("u"), col("pa").as("v")))
+        val newBi = eNew.select(col("pa").as("u"), col("pb").as("v"))
+          .unionAll(eNew.select(col("pb").as("u"), col("pa").as("v")))
+        // 1 new edge: common OLD neighbors of each new edge's endpoints
+        val t1 = eNew
+          .join(oldBi.select(col("u").as("pa"), col("v").as("w1")), "pa")
+          .join(oldBi.select(col("u").as("pb"), col("v").as("w2")), "pb")
+          .filter(col("w1") === col("w2"))
+          .agg(count(lit(1)).as("n")).as[Long].head()
+        // 2 new edges: new-new wedge (center c), old closing edge (u<v)
+        val t2 = newBi.select(col("u").as("c"), col("v").as("wu"))
+          .join(newBi.select(col("u").as("c"), col("v").as("wv")), "c")
+          .filter(col("wu") < col("wv"))
+          .join(old.select(col("pa").as("wu"), col("pb").as("wv")),
+            Seq("wu", "wv"), "left_semi")
+          .agg(count(lit(1)).as("n")).as[Long].head()
+        // 3 new edges: census of the batch's new-edge subgraph. Edges
+        // are canonical (a<b), so each triangle a<b<c is exactly one
+        // (a,b)⋈(b,c) path closed by (a,c) — no orientation machinery
+        // needed at delta scale (a huge backfill batch would swap in
+        // the degree-oriented batch kernel here).
+        val t3 = eNew.select(col("pa").as("a"), col("pb").as("b"))
+          .join(eNew.select(col("pa").as("b"), col("pb").as("c")), "b")
+          .join(eNew.select(col("pa").as("a"), col("pb").as("c")),
+            Seq("a", "c"), "left_semi")
+          .agg(count(lit(1)).as("n")).as[Long].head()
+        Seq((oldEdges + eNew.count(), oldTri + t1 + t2 + t3))
+          .toDF("n_edges", "n_triangles")
       }
-  }
+      Publish(tablePath)(old.unionAll(eNew).write.mode("overwrite").parquet(_))
+      eNew.unpersist()
+    }
 
   /** Streaming IVF index maintenance — the ingest path of the ANN
     * serving shapes (s04/s11/s15/s16): the codebook is trained OFFLINE
@@ -1804,49 +1643,42 @@ object Pipelines {
     * cell is a metadata-only scan of the partitioned layout.
     */
   def ivfIndexSink(vectors: DataFrame, centroids: DataFrame,
-      indexPath: String, checkpoint: String): DataStreamWriter[Row] = {
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        import graft.expr.VectorExprs.dot
-        val spark = batch.sparkSession
-        val cent = centroids
-          .select(col("c_id").as("_cid"), col("cv").as("_cv"))
-          .withColumn("_cnrm", sqrt(dot(col("_cv"), col("_cv"))))
-        val e = batch.select(col("vec_id"), col("embedding"))
-          .withColumn("_nrm", sqrt(dot(col("embedding"), col("embedding"))))
-        val wA = org.apache.spark.sql.expressions.Window
-          .partitionBy("vec_id").orderBy(col("_ccos").desc, col("_cid").asc)
-        val assigned = e.crossJoin(broadcast(cent))
-          .withColumn("_ccos",
-            dot(col("embedding"), col("_cv")) / (col("_nrm") * col("_cnrm")))
-          .withColumn("_rn", row_number().over(wA))
-          .filter(col("_rn") === 1)
-          .select(col("vec_id"), col("_cid").as("cell"), col("embedding"))
-        val own = s"batch=$batchId"
-        val others = Option(new java.io.File(indexPath).listFiles())
-          .getOrElse(Array.empty).map(_.getName)
-          .filter(n => n.startsWith("batch=") && n != own)
-        val fresh =
-          if (others.isEmpty) assigned
-          else assigned.join(
-            spark.read.option("basePath", indexPath)
-              .parquet(others.map(n => s"$indexPath/$n").toIndexedSeq: _*)
-              .select("vec_id"),
-            Seq("vec_id"), "left_anti")
-        Publish(s"$indexPath/$own")(
-          fresh.write.mode("overwrite").partitionBy("cell").parquet(_))
-        ()
-      }
-  }
+      indexPath: String, checkpoint: String): DataStreamWriter[Row] =
+    eachBatch(vectors, checkpoint, OutputMode.Append) { (batch, batchId) =>
+      import graft.expr.VectorExprs.dot
+      val cent = centroids
+        .select(col("c_id").as("_cid"), col("cv").as("_cv"))
+        .withColumn("_cnrm", sqrt(dot(col("_cv"), col("_cv"))))
+      val e = batch.select(col("vec_id"), col("embedding"))
+        .withColumn("_nrm", sqrt(dot(col("embedding"), col("embedding"))))
+      val wA = Window.partitionBy("vec_id")
+        .orderBy(col("_ccos").desc, col("_cid").asc)
+      val assigned = e.crossJoin(broadcast(cent))
+        .withColumn("_ccos",
+          dot(col("embedding"), col("_cv")) / (col("_nrm") * col("_cnrm")))
+        .withColumn("_rn", row_number().over(wA))
+        .filter(col("_rn") === 1)
+        .select(col("vec_id"), col("_cid").as("cell"), col("embedding"))
+      val own = s"batch=$batchId"
+      val others = Option(new java.io.File(indexPath).listFiles())
+        .getOrElse(Array.empty).map(_.getName)
+        .filter(n => n.startsWith("batch=") && n != own)
+      val fresh =
+        if (others.isEmpty) assigned
+        else assigned.join(
+          batch.sparkSession.read.option("basePath", indexPath)
+            .parquet(others.map(n => s"$indexPath/$n").toIndexedSeq: _*)
+            .select("vec_id"),
+          Seq("vec_id"), "left_anti")
+      Publish(s"$indexPath/$own")(
+        fresh.write.mode("overwrite").partitionBy("cell").parquet(_))
+    }
 
   /** Per-cell population of a [[ivfIndexSink]]-maintained index — the
     * streaming-side twin of the s15 cell-balance diagnostic. Counting
     * rows per partition value touches parquet footers only.
     */
-  def ivfCellStats(spark: org.apache.spark.sql.SparkSession,
+  def ivfCellStats(spark: SparkSession,
       indexPath: String): DataFrame =
     spark.read.parquet(indexPath)
       .groupBy("cell").agg(count(lit(1)).as("n_vectors"))

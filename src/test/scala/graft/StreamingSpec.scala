@@ -560,6 +560,63 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.map(_._2) == Set(7L), s"window 0 must hold 7 values: $got")
   }
 
+  test("streaming trending top-k replay rewrites its batch, never duplicates rows") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val mem = MemoryStream[(java.sql.Timestamp, String)]
+    val out = tmp("graft_trend_replay_out")
+    val cp = tmp("graft_trend_replay_cp")
+    def ts(min: Int) = new java.sql.Timestamp(1700000000000L + min * 60000L)
+    def run(): Unit = Pipelines.runToCompletion(
+      Pipelines.trendingTopK(mem.toDF().toDF("ts", "cat"),
+        "ts", "cat", windowDur = "10 minutes", watermarkDelay = "0 seconds",
+        k = 2, outPath = out, checkpoint = cp))
+    // row multiset: sorted, duplicates kept
+    def rows(): Seq[(java.sql.Timestamp, String, Long)] =
+      spark.read.parquet(out).select("w_start", "cat", "cnt")
+        .as[(java.sql.Timestamp, String, Long)].collect().toSeq
+        .sortBy(r => (r._1.getTime, r._2))
+
+    mem.addData((ts(1), "catA"), (ts(2), "catA"), (ts(4), "catB"),
+      (ts(6), "catC"))
+    run()
+    mem.addData((ts(25), "catZ")) // closes window 0
+    run()
+    val before = rows()
+    assert(before.map(_._2) == Seq("catA", "catB"), before.toString)
+    forceReplay(cp) // the batch that emitted window 0 runs again
+    run()
+    assert(rows() == before, s"replay changed the output: ${rows()}")
+  }
+
+  test("streaming histogram quantiles replay rewrites its batch, never duplicates rows") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val mem = MemoryStream[(java.sql.Timestamp, Double)]
+    val out = tmp("graft_histq_replay_out")
+    val cp = tmp("graft_histq_replay_cp")
+    def ts(min: Int) = new java.sql.Timestamp(1699999800000L + min * 60000L)
+    def run(): Unit = Pipelines.runToCompletion(
+      Pipelines.windowedHistQuantiles(mem.toDF().toDF("ts", "value"),
+        "ts", "value", windowDur = "10 minutes", watermarkDelay = "0 seconds",
+        bucketWidth = 1000L, qs = Seq(0.5, 0.9),
+        outPath = out, checkpoint = cp))
+    // row multiset: sorted, duplicates kept
+    def rows(): Seq[(Double, Long, Double)] =
+      spark.read.parquet(out).select("q", "n", "est")
+        .as[(Double, Long, Double)].collect().toSeq.sorted
+
+    mem.addData((ts(0), 12.0), (ts(1), 41.0), (ts(2), 55.0))
+    run()
+    mem.addData((ts(25), 1.0)) // closes window 0
+    run()
+    val before = rows()
+    assert(before.map(_._1) == Seq(0.5, 0.9), before.toString)
+    forceReplay(cp) // the batch that emitted window 0 runs again
+    run()
+    assert(rows() == before, s"replay changed the output: ${rows()}")
+  }
+
   test("streaming upsert sink merges micro-batches into a parquet table") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -832,6 +889,41 @@ class StreamingSpec extends AnyFunSuite {
     Pipelines.applyAggViewBatch(spark, table, partial, "region", 7L)
     val after3 = snapshot()
     assert(after3("EU") == (6L, BigDecimal("63.00")), after3.toString)
+  }
+
+  test("aggregate-view sink fails loudly when the table's _LAST_BATCH is ahead of the incoming batch") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val dim = Seq((1L, "EU"), (2L, "US")).toDF("cust_id", "region")
+    val root = tmp("graft_aggview_ahead")
+    val table = s"$root/table"
+    def run(mem: MemoryStream[(Long, Double)], cp: String): Unit =
+      Pipelines.runToCompletion(
+        Pipelines.aggViewSink(mem.toDF().toDF("cust_id", "amount"),
+          dim, table, cp, joinKey = "cust_id", viewKey = "region",
+          valueCol = "amount"))
+    def snapshot(): Set[(String, Long, BigDecimal)] =
+      spark.read.parquet(table).select("region", "n_rows", "s")
+        .as[(String, Long, BigDecimal)].collect().toSet
+
+    val first = MemoryStream[(Long, Double)]
+    first.addData((1L, 10.0), (2L, 5.0))
+    run(first, s"$root/ckpt1")
+    first.addData((1L, 1.0))
+    run(first, s"$root/ckpt1") // batches 0 and 1: the mark is 1
+    val before = snapshot()
+
+    // a fresh checkpoint starts again at batch 0: folding it would
+    // either drop its rows (skipped as a "replay") or double-count a
+    // replay, so the sink must refuse
+    val fresh = MemoryStream[(Long, Double)]
+    fresh.addData((2L, 7.0))
+    val err = intercept[Exception](run(fresh, s"$root/ckpt2"))
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains(table) &&
+      m.contains("_LAST_BATCH 1") && m.contains("batch 0")), msgs.toString)
+    assert(snapshot() == before, snapshot().toString)
   }
 
   test("zone-mapped sink maintains per-file stats a pruned read can trust") {
