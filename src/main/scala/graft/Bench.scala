@@ -433,9 +433,8 @@ object Bench {
       // every ratio). Outside the timed sections; a one-time cost like
       // the prepare() index builds.
       if (!sys.env.contains("SPARK_GRAFT_SF1_DIR") &&
-          sys.env.getOrElse("SPARK_GRAFT_CURVE", "1") != "0" &&
-          GenScale.ensure(spark, sfDir, cand.getPath))
-        System.err.println(s"[bench] regenerated ${cand.getPath} from $sfDir")
+          sys.env.getOrElse("SPARK_GRAFT_CURVE", "1") != "0")
+        GenScale.ensure(spark, sfDir, cand.getPath)
       if (sys.env.getOrElse("SPARK_GRAFT_CURVE", "1") == "0" ||
           !cand.isDirectory) ""
       else {

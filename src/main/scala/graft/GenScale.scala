@@ -70,23 +70,12 @@ object GenScale {
   /** Build `out` from `src` iff absent or STALE (source fingerprint
     * mismatch — a driver-side fixture regeneration must invalidate the
     * scaled twin, or the bench's big rung silently compares fresh
-    * sf0.1 timings against data scaled from the OLD fixture). Returns
-    * true when a (re)build ran. Requires a UTC session (the NTZ
-    * event-time cast).
+    * sf0.1 timings against data scaled from the OLD fixture), under
+    * the [[graft.io.DerivedCache]] guard. Returns `out`. Requires a UTC
+    * session (the NTZ event-time cast).
     */
-  def ensure(spark: SparkSession, src: String, out: String): Boolean =
-    synchronized {
-      val fp = graft.io.DerivedCache.fingerprint(src, tables)
-      if (graft.io.DerivedCache.isFresh(out, s"$out/_GRAFT_READY", fp)) false
-      else {
-        run(spark, src, out)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(out, "_GRAFT_READY"),
-          "ok".getBytes("UTF-8"))
-        graft.io.DerivedCache.stamp(out, fp)
-        true
-      }
-    }
+  def ensure(spark: SparkSession, src: String, out: String): String =
+    graft.io.DerivedCache.ensure(out, src, tables)(run(spark, src, _))
 
   def run(spark: SparkSession, src: String, out: String): Unit = {
 

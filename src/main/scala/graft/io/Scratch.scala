@@ -6,9 +6,12 @@ package graft.io
   *
   * Two distinct lifetimes, two distinct rules:
   *
-  *  - [[cache]]: SHARED per-SF derived artifacts, fingerprint-stamped
-  *    via [[DerivedCache]] and reused across JVMs. Immutable once
-  *    stamped for a given source state — safe to read concurrently.
+  *  - [[cache]]: SHARED per-SF derived artifacts, reused across JVMs.
+  *    Each is built through [[DerivedCache.ensure]]: under a file lock
+  *    on the artifact, compare its `_FINGERPRINT` stamp with the
+  *    sources, and on a mismatch unstamp, rebuild IN PLACE and stamp.
+  *    Unchanged once stamped for a given source state — safe to read
+  *    concurrently.
   *
   *  - [[runRoot]]: PER-PROCESS unique directories for streaming query
   *    sinks + checkpoints. Round 10's one red row
@@ -41,9 +44,9 @@ object Scratch {
   def sfTag(dir: String): String =
     new java.io.File(dir).getName.replace(".", "_")
 
-  /** Shared per-SF derived-cache location: `target/<kind>/<sf>[/<leaf>]`.
-    * Callers guard freshness with [[DerivedCache]] and treat the
-    * artifact as immutable once stamped.
+  /** Shared per-SF derived-cache location: `target/<kind>/<sf>[/<leaf>]`,
+    * the `loc` handed to [[DerivedCache.ensure]] (whose lock file is a
+    * dot-named sibling of that path, outside the artifact).
     */
   def cache(kind: String, dir: String, leaf: String = ""): String = {
     val base = s"$targetRoot/$kind/${sfTag(dir)}"

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.Sources
+import graft.io.{DerivedCache, Scratch, Sources}
 
 /** Deduplication operators over `documents` — the north-star suite for
   * a 100 TB training-data pipeline: exact (hash group-by), MinHash+LSH
@@ -113,17 +113,11 @@ object DedupOps {
     */
   private[graft] def ensureNearDupPairs(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    synchronized {
-      val sf = new java.io.File(dir).getName.replace(".", "_")
-      val loc = s"${graft.io.Scratch.targetRoot}/neardup/$sf/pairs"
-      val fp = graft.io.DerivedCache.fingerprint(dir, Seq("documents"))
-      if (!graft.io.DerivedCache.isFresh(loc, s"$loc/_SUCCESS", fp)) {
-        graft.api.Dedup.nearDupPairs(Sources.table(spark, dir, "documents"),
-          threshold = 0.5, maxShingleFreq = Some(maxShingleDocFreq))
-          .write.mode("overwrite").parquet(loc)
-        graft.io.DerivedCache.stamp(loc, fp)
-      }
-      loc
+    DerivedCache.ensure(Scratch.cache("neardup", dir, "pairs"), dir,
+        Seq("documents")) { loc =>
+      graft.api.Dedup.nearDupPairs(Sources.table(spark, dir, "documents"),
+        threshold = 0.5, maxShingleFreq = Some(maxShingleDocFreq))
+        .write.mode("overwrite").parquet(loc)
     }
 
   private def nearDupPairsCached(
@@ -549,20 +543,14 @@ object DedupOps {
     */
   private[graft] def ensureIncrementalIndex(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    synchronized {
-      val sf = new java.io.File(dir).getName.replace(".", "_")
-      val loc = s"${graft.io.Scratch.targetRoot}/incdedup/$sf"
-      val fp = graft.io.DerivedCache.fingerprint(dir, Seq("documents"))
-      if (!graft.io.DerivedCache.isFresh(loc, s"$loc/sig/_SUCCESS", fp)) {
-        val docs = Sources.table(spark, dir, "documents")
-        val corpus =
-          docs.filter(graft.api.Sampling.hashBucket(col("doc_id")) < 205)
-        val (shs, sig) = graft.api.Dedup.incrementalCorpusIndex(corpus)
-        shs.write.mode("overwrite").parquet(s"$loc/shingles")
-        sig.write.mode("overwrite").parquet(s"$loc/sig")
-        graft.io.DerivedCache.stamp(loc, fp)
-      }
-      loc
+    DerivedCache.ensure(Scratch.cache("incdedup", dir), dir,
+        Seq("documents")) { loc =>
+      val docs = Sources.table(spark, dir, "documents")
+      val corpus =
+        docs.filter(graft.api.Sampling.hashBucket(col("doc_id")) < 205)
+      val (shs, sig) = graft.api.Dedup.incrementalCorpusIndex(corpus)
+      shs.write.mode("overwrite").parquet(s"$loc/shingles")
+      sig.write.mode("overwrite").parquet(s"$loc/sig")
     }
 
   /** Incremental dedup: near-dups of a new ingest batch against the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.api.Joins
-import graft.io.Sources
+import graft.io.{DerivedCache, Scratch, Sources}
 
 /** Join operators beyond the equi-join family: the bucketed-time range
   * join (an interval predicate with NO shared entity key — the case the
@@ -108,32 +108,26 @@ object JoinOps {
     * re-attached — Spark keeps bucketing metadata in the catalog, not
     * the files.
     */
-  def ensureBucketed(spark: org.apache.spark.sql.SparkSession, dir: String): (String, String) = synchronized {
-    val sf = new java.io.File(dir).getName.replace(".", "_")
+  def ensureBucketed(spark: org.apache.spark.sql.SparkSession, dir: String): (String, String) = {
     val names = Seq(("orders", "o_orderkey"), ("lineitem", "l_orderkey")).map { case (t, k) =>
-      val name = s"graft_${t}_bucketed_$sf"
-      val loc = s"${graft.io.Scratch.targetRoot}/bucketed/$sf/$t"
-      val fp = graft.io.DerivedCache.fingerprint(dir, Seq(t))
-      if (!graft.io.DerivedCache.isFresh(loc, s"$loc/_SUCCESS", fp)) {
-        // stale (or first build): rewrite files AND refresh the catalog
-        // entry — a regenerated fixture must never serve old buckets.
-        // The stderr line makes the rebuild VISIBLE in any bench log:
-        // timeAll swallows prepare() failures by design, so a build
-        // that crashed in prepare replays here inside the TIMED fn —
-        // r14's driver draw read r19 at 39 s at sf1 (56.9×, calm
-        // windows read ~2 s) and this line is how that class of
-        // reading becomes attributable instead of a round of forensics.
-        System.err.println(s"[ensureBucketed] REBUILD $name from $dir")
+      val name = s"graft_${t}_bucketed_${Scratch.sfTag(dir)}"
+      // stale (or first build): rewrite files AND refresh the catalog
+      // entry — a regenerated fixture must never serve old buckets.
+      // The guard's rebuild line makes a rebuild VISIBLE in any bench
+      // log: timeAll swallows prepare() failures by design, so a build
+      // that crashed in prepare replays here inside the TIMED fn.
+      val loc = DerivedCache.ensure(Scratch.cache("bucketed", dir, t), dir,
+          Seq(t)) { path =>
         spark.sql(s"DROP TABLE IF EXISTS $name")
         Sources.table(spark, dir, t).write.mode("overwrite")
           .bucketBy(8, k).sortBy(k)
-          .option("path", loc).saveAsTable(name)
-        graft.io.DerivedCache.stamp(loc, fp)
-      } else if (!spark.catalog.tableExists(name)) {
+          .option("path", path).saveAsTable(name)
+      }
+      if (!spark.catalog.tableExists(name)) {
         // fresh files from an earlier JVM: re-attach the catalog entry
         // (Spark keeps bucketing metadata in the catalog, not the files)
         val src = Sources.table(spark, dir, t)
-        spark.sql(s"CREATE TABLE $name (${src.schema.toDDL}) USING parquet " +
+        spark.sql(s"CREATE TABLE IF NOT EXISTS $name (${src.schema.toDDL}) USING parquet " +
           s"CLUSTERED BY ($k) INTO 8 BUCKETS LOCATION '$loc'")
       }
       name
@@ -266,18 +260,13 @@ object JoinOps {
     * layout a 100 TB event store actually ships with.
     */
   def ensurePartitioned(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = synchronized {
-    val sf = new java.io.File(dir).getName.replace(".", "_")
-    val loc = s"${graft.io.Scratch.targetRoot}/partitioned/$sf/events_by_day"
-    val fp = graft.io.DerivedCache.fingerprint(dir, Seq("events"))
-    if (!graft.io.DerivedCache.isFresh(loc, s"$loc/_SUCCESS", fp)) {
+      dir: String): String =
+    DerivedCache.ensure(Scratch.cache("partitioned", dir, "events_by_day"),
+        dir, Seq("events")) { loc =>
       Sources.table(spark, dir, "events")
         .withColumn("day", expr("ts div 1000 div 86400000000"))
         .write.mode("overwrite").partitionBy("day").parquet(loc)
-      graft.io.DerivedCache.stamp(loc, fp)
     }
-    loc
-  }
 
   /** Partition pruning — THE scan optimization at 100 TB: a one-week
     * filter over a day-partitioned event store must read 7 partitions'
@@ -764,23 +753,19 @@ object JoinOps {
     * stats selective.
     */
   def ensureZoneMapped(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (String, String) = synchronized {
-    val sf = new java.io.File(dir).getName.replace(".", "_")
-    val loc = s"${graft.io.Scratch.targetRoot}/zonemap/$sf/events_by_time"
-    val statsLoc = s"${graft.io.Scratch.targetRoot}/zonemap/$sf/stats"
-    val fp = graft.io.DerivedCache.fingerprint(dir, Seq("events"))
-    if (!graft.io.DerivedCache.isFresh(statsLoc, s"$statsLoc/_SUCCESS", fp)) {
+      dir: String): (String, String) = {
+    val root = DerivedCache.ensure(Scratch.cache("zonemap", dir), dir,
+        Seq("events")) { loc =>
       Sources.table(spark, dir, "events")
         .withColumn("us", expr("ts div 1000"))
         .repartitionByRange(16, col("us"))
         .sortWithinPartitions("us")
-        .write.mode("overwrite").parquet(loc)
-      graft.io.ZoneMap.stats(spark, loc, "us")
+        .write.mode("overwrite").parquet(s"$loc/events_by_time")
+      graft.io.ZoneMap.stats(spark, s"$loc/events_by_time", "us")
         .coalesce(1)
-        .write.mode("overwrite").parquet(statsLoc)
-      graft.io.DerivedCache.stamp(statsLoc, fp)
+        .write.mode("overwrite").parquet(s"$loc/stats")
     }
-    (loc, statsLoc)
+    (s"$root/events_by_time", s"$root/stats")
   }
 
   /** Zone-map file skipping: a one-week time filter answered by reading
@@ -824,22 +809,18 @@ object JoinOps {
     * that rewrites it time-clustered and refreshes the zone map.
     */
   def ensureCompacted(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (String, String) = synchronized {
-    val sf = new java.io.File(dir).getName.replace(".", "_")
-    val frag = s"${graft.io.Scratch.targetRoot}/compact/$sf/events_fragmented"
-    val loc = s"${graft.io.Scratch.targetRoot}/compact/$sf/events_compacted"
-    val statsLoc = s"${graft.io.Scratch.targetRoot}/compact/$sf/stats"
-    val fp = graft.io.DerivedCache.fingerprint(dir, Seq("events"))
-    if (!graft.io.DerivedCache.isFresh(statsLoc, s"$statsLoc/_SUCCESS", fp)) {
+      dir: String): (String, String) = {
+    val root = DerivedCache.ensure(Scratch.cache("compact", dir), dir,
+        Seq("events")) { loc =>
       Sources.table(spark, dir, "events")
         .withColumn("us", expr("ts div 1000"))
         .repartition(48, col("event_id"))
-        .write.mode("overwrite").parquet(frag)
-      graft.api.Tables.compactClustered(spark, frag, loc, "us", statsLoc,
+        .write.mode("overwrite").parquet(s"$loc/events_fragmented")
+      graft.api.Tables.compactClustered(spark, s"$loc/events_fragmented",
+        s"$loc/events_compacted", "us", s"$loc/stats",
         targetFileBytes = 4L * 1024 * 1024)
-      graft.io.DerivedCache.stamp(statsLoc, fp)
     }
-    (loc, statsLoc)
+    (s"$root/events_compacted", s"$root/stats")
   }
 
   /** Compaction correctness: the same zone-map-pruned one-week scan as
@@ -876,20 +857,17 @@ object JoinOps {
     prepare = (spark, dir) => { ensureCompacted(spark, dir); () })
 
   def ensureBloomIndexed(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (String, String) = synchronized {
-    val sf = new java.io.File(dir).getName.replace(".", "_")
-    val loc = s"${graft.io.Scratch.targetRoot}/bloomidx/$sf/lineitem_by_shipdate"
-    val statsLoc = s"${graft.io.Scratch.targetRoot}/bloomidx/$sf/stats"
-    val fp = graft.io.DerivedCache.fingerprint(dir, Seq("lineitem"))
-    if (!graft.io.DerivedCache.isFresh(statsLoc, s"$statsLoc/_SUCCESS", fp)) {
+      dir: String): (String, String) = {
+    val root = DerivedCache.ensure(Scratch.cache("bloomidx", dir), dir,
+        Seq("lineitem")) { loc =>
       Sources.table(spark, dir, "lineitem")
         .repartitionByRange(16, col("l_shipdate"))
         .sortWithinPartitions("l_shipdate")
-        .write.mode("overwrite").parquet(loc)
-      graft.io.BloomIndex.build(spark, loc, "l_orderkey", statsLoc)
-      graft.io.DerivedCache.stamp(statsLoc, fp)
+        .write.mode("overwrite").parquet(s"$loc/lineitem_by_shipdate")
+      graft.io.BloomIndex.build(spark, s"$loc/lineitem_by_shipdate",
+        "l_orderkey", s"$loc/stats")
     }
-    (loc, statsLoc)
+    (s"$root/lineitem_by_shipdate", s"$root/stats")
   }
 
   /** Bloom-index file skipping — the equality-predicate complement of
@@ -999,11 +977,9 @@ object JoinOps {
     * from the dim scan at runtime), not static constraint propagation.
     */
   def ensureDayDim(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = synchronized {
-    val sf = new java.io.File(dir).getName.replace(".", "_")
-    val loc = s"${graft.io.Scratch.targetRoot}/partitioned/$sf/day_dim"
-    val fp = graft.io.DerivedCache.fingerprint(dir, Seq("events"))
-    if (!graft.io.DerivedCache.isFresh(loc, s"$loc/_SUCCESS", fp)) {
+      dir: String): String =
+    DerivedCache.ensure(Scratch.cache("partitioned", dir, "day_dim"), dir,
+        Seq("events")) { loc =>
       val days = Sources.table(spark, dir, "events")
         .withColumn("day", expr("ts div 1000 div 86400000000"))
         .groupBy("day").agg(count(lit(1)).as("n"))
@@ -1012,10 +988,7 @@ object JoinOps {
       days.select("day").join(busy, Seq("day"), "left")
         .select(col("day"), coalesce(col("tag"), lit("cold")).as("tag"))
         .write.mode("overwrite").parquet(loc)
-      graft.io.DerivedCache.stamp(loc, fp)
     }
-    loc
-  }
 
   /** Dynamic partition pruning — the RUNTIME half of the r21 story: the
     * week filter there is a literal the planner prunes by at planning
@@ -1069,11 +1042,9 @@ object JoinOps {
     * fingerprint staleness guard.
     */
   def ensureEvolved(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = synchronized {
-    val sf = new java.io.File(dir).getName.replace(".", "_")
-    val loc = s"${graft.io.Scratch.targetRoot}/evolved/$sf/orders_channel"
-    val fp = graft.io.DerivedCache.fingerprint(dir, Seq("orders"))
-    if (!graft.io.DerivedCache.isFresh(loc, s"$loc/v2/_SUCCESS", fp)) {
+      dir: String): String =
+    DerivedCache.ensure(Scratch.cache("evolved", dir, "orders_channel"), dir,
+        Seq("orders")) { loc =>
       val o = Sources.table(spark, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
       o.filter(col("o_orderdate") < "1996-01-01")
@@ -1084,10 +1055,7 @@ object JoinOps {
             .when(col("o_orderkey") % 3 === 1, "store")
             .otherwise("app"))
         .write.mode("overwrite").parquet(s"$loc/v2")
-      graft.io.DerivedCache.stamp(loc, fp)
     }
-    loc
-  }
 
   /** Schema evolution across file generations — the scan-layer fact of
     * life on any long-lived 100 TB table: columns get added, and the

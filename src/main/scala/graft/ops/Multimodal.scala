@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.Sources
+import graft.io.{DerivedCache, Scratch, Sources}
 
 /** Multimodal column plumbing: media payloads ride as opaque `binary`
   * columns with typed metadata; decode / feature-extraction runs
@@ -53,28 +53,19 @@ object Multimodal {
       .as[MediaRecord]
   }
 
-  /** Root for the per-SF media fixture directories (one opaque .bin
-    * file per sampled document — the on-disk shape a real media corpus
-    * has in an object store).
+  /** Ensure the per-SF media directory for `dir` exists: every 10th
+    * document's text bytes become `media_<doc_id>.bin` (one opaque file
+    * per sampled document — the on-disk shape a real media corpus has
+    * in an object store). The files are written by the EXECUTORS
+    * (`foreachPartition`, exactly how a real cluster job would stage
+    * media into a shared store) — never collected to the driver.
+    * Content is a pure function of the documents table, guarded by
+    * [[DerivedCache]]: a regeneration clears and restages.
     */
-  private val mediaFixtureRoot = graft.io.Scratch.targetRoot + "/fixtures"
-
-  /** Ensure the media fixture directory for `dir` exists: every 10th
-    * document's text bytes become `media_<doc_id>.bin`. The files are
-    * written by the EXECUTORS (`foreachPartition`, exactly how a real
-    * cluster job would stage media into a shared store) — never
-    * collected to the driver. Idempotent: content is a pure function of
-    * the documents table — the _DONE marker plus a source fingerprint
-    * ([[graft.io.DerivedCache]]) skips the write only while the
-    * documents fixture is unchanged; a regeneration clears and
-    * restages.
-    */
-  def ensureMediaFiles(spark: SparkSession, dir: String): String = synchronized {
-    import java.nio.file.{Files, Paths}
-    val sfName = new java.io.File(dir).getName
-    val out = s"$mediaFixtureRoot/media_$sfName"
-    val fp = graft.io.DerivedCache.fingerprint(dir, Seq("documents"))
-    if (!graft.io.DerivedCache.isFresh(out, s"$out/_DONE", fp)) {
+  def ensureMediaFiles(spark: SparkSession, dir: String): String =
+    DerivedCache.ensure(Scratch.cache("media", dir), dir,
+        Seq("documents")) { out =>
+      import java.nio.file.{Files, Paths}
       // a stale rebuild must CLEAR the directory first: leftover
       // media_<id>.bin files from the old fixture would survive the
       // overwrite (ids change) and leak into the binaryFile glob
@@ -90,11 +81,7 @@ object Multimodal {
               row.getAs[Array[Byte]](1))
           }
         }
-      Files.createFile(Paths.get(s"$out/_DONE"))
-      graft.io.DerivedCache.stamp(out, fp)
     }
-    out
-  }
 
   /** The scale path: payloads read through the `binaryFile` datasource
     * (path/length/content columns straight off the store — the same

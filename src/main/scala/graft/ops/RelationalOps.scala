@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.io.Sources
+import graft.io.{DerivedCache, Scratch, Sources}
 
 /** Generalized relational operator surface (SURVEY.md §7.2 M3): the join
   * variants, set ops, generators, window frames and grouping sets the
@@ -1443,19 +1443,14 @@ object RelationalOps {
     * section; a regenerated fixture rebuilds it).
     */
   private[graft] def ensureOrcMirror(
-      spark: SparkSession, dir: String): String = synchronized {
-    val sf = new java.io.File(dir).getName.replace(".", "_")
-    val loc = s"${graft.io.Scratch.targetRoot}/mirror/$sf/lineitem_orc"
-    val fp = graft.io.DerivedCache.fingerprint(dir, Seq("lineitem"))
-    if (!graft.io.DerivedCache.isFresh(loc, s"$loc/_SUCCESS", fp)) {
+      spark: SparkSession, dir: String): String =
+    DerivedCache.ensure(Scratch.cache("mirror", dir, "lineitem_orc"), dir,
+        Seq("lineitem")) { loc =>
       Sources.table(spark, dir, "lineitem")
         .select("l_orderkey", "l_quantity", "l_extendedprice",
           "l_discount", "l_returnflag")
         .write.mode("overwrite").orc(loc)
-      graft.io.DerivedCache.stamp(loc, fp)
     }
-    loc
-  }
 
   /** ORC SCAN PARITY — the second columnar format of the source
     * surface (SURVEY §2.1 S1 beyond parquet; ORC ships in the Spark
@@ -1489,18 +1484,13 @@ object RelationalOps {
     * (header + explicit null token, the shape a drop-zone delivers).
     */
   private[graft] def ensureCsvMirror(
-      spark: SparkSession, dir: String): String = synchronized {
-    val sf = new java.io.File(dir).getName.replace(".", "_")
-    val loc = s"${graft.io.Scratch.targetRoot}/mirror/$sf/orders_csv"
-    val fp = graft.io.DerivedCache.fingerprint(dir, Seq("orders"))
-    if (!graft.io.DerivedCache.isFresh(loc, s"$loc/_SUCCESS", fp)) {
+      spark: SparkSession, dir: String): String =
+    DerivedCache.ensure(Scratch.cache("mirror", dir, "orders_csv"), dir,
+        Seq("orders")) { loc =>
       Sources.table(spark, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
         .write.mode("overwrite").option("header", "true").csv(loc)
-      graft.io.DerivedCache.stamp(loc, fp)
     }
-    loc
-  }
 
   /** CSV INGEST PARITY — the text-format leg of the source surface:
     * the engine ingests a header CSV mirror of orders with an

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.io.{Publish, Sources}
+import graft.io.{DerivedCache, Publish, Scratch, Sources}
 import graft.stream.Pipelines
 
 /** Streaming pipelines under the driver's hard correctness signal:
@@ -47,7 +47,7 @@ object StreamQueries {
     * Bench with REPS>1 re-executes `fn` in the same JVM.
     */
   private def scratch(dir: String, qname: String): String =
-    graft.io.Scratch.runRoot("stream", dir, qname)
+    Scratch.runRoot("stream", dir, qname)
 
   /** Micro-batches committed under a query's scratch root: the
     * two-run drives check that each run was exactly one batch.
@@ -170,40 +170,19 @@ object StreamQueries {
     * parses back to the same IEEE value), so the decoded stream is
     * value-identical to the source table.
     *
-    * Concurrency contract: the cache is CONTENT-ADDRESSED (the source
-    * fingerprint is in the path) and immutable once published. A
-    * build stages into this run's private scratch and atomically
-    * renames into place; losing the publish race to another process
-    * just means reading that process's identical artifact. Nothing
-    * ever rewrites a published path — the shared-scratch overwrite
-    * hazard the round-10 postmortem flagged cannot occur.
+    * Built under the [[DerivedCache]] guard, whose per-artifact lock
+    * keeps two processes from building it at once.
     */
   private[graft] def ensureEnvelopeInput(spark: SparkSession,
-      dir: String): String = synchronized {
-    val fp = graft.io.DerivedCache.fingerprint(dir, Seq("events"))
-    val loc = graft.io.Scratch.cache("stream_envelope", dir, s"v_${fp.take(8)}")
-    val locFile = new java.io.File(loc)
-    if (!new java.io.File(locFile, "_SUCCESS").exists()) {
-      val staging = new java.io.File(
-        graft.io.Scratch.runRoot("staging", dir, s"envelope_${fp.take(8)}"))
+      dir: String): String =
+    DerivedCache.ensure(Scratch.cache("stream_envelope", dir), dir,
+        Seq("events")) { loc =>
       Sources.table(spark, dir, "events")
         .select(to_json(struct(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))).as("data"))
         .coalesce(8)
-        .write.mode("overwrite").json(staging.getPath)
-      locFile.getParentFile.mkdirs()
-      try {
-        java.nio.file.Files.move(staging.toPath, locFile.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        ()
-      } catch {
-        case _: java.nio.file.FileSystemException
-            if new java.io.File(locFile, "_SUCCESS").exists() =>
-          () // a concurrent builder published the same content first
-      }
+        .write.mode("overwrite").json(loc)
     }
-    loc
-  }
 
   /** qs2: an actual streaming run of the reference's ingest shape —
     * JSON envelope files in, [[graft.io.Sources.decodeEnvelope]]
@@ -1999,11 +1978,9 @@ object StreamQueries {
     * table hash-fails.
     */
   private[graft] def ensureSourceOverlap(
-      spark: SparkSession, dir: String): String = synchronized {
-    val sf = new java.io.File(dir).getName.replace(".", "_")
-    val loc = s"${graft.io.Scratch.targetRoot}/mirror/$sf/source_overlap"
-    val fp = graft.io.DerivedCache.fingerprint(dir, Seq("documents"))
-    if (!graft.io.DerivedCache.isFresh(loc, s"$loc/_SUCCESS", fp)) {
+      spark: SparkSession, dir: String): String =
+    DerivedCache.ensure(Scratch.cache("mirror", dir, "source_overlap"), dir,
+        Seq("documents")) { loc =>
       val sh = Sources.table(spark, dir, "documents")
         .select(col("source"),
           explode(graft.expr.WordShingles.word_shingles(col("text"), 5))
@@ -2027,10 +2004,7 @@ object StreamQueries {
           col("n").as("nb"))), Seq("src_b"))
         .select("src_a", "src_b", "n_inter", "na", "nb")
         .write.mode("overwrite").parquet(loc)
-      graft.io.DerivedCache.stamp(loc, fp)
     }
-    loc
-  }
 
   // qs27's mirrored IEEE readout tail over the exact registers: mean
   // and population std, each a fixed left-associated chain of

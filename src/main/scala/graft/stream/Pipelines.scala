@@ -629,41 +629,43 @@ object Pipelines {
     * re-scanning the accepted corpus.
     *
     * Replay-idempotent (exactly-once effective): each batch's rows
-    * land in `basePath/<route>/batch=<id>/` with OVERWRITE, not a
-    * blind append to the route root — a crash after some routes wrote
-    * but before the checkpoint commit replays the batch, and the
-    * rerun overwrites the same per-batch directories with the same
-    * deterministic rows instead of duplicating them (routing is a
-    * pure function of the batch). Readers see one partitioned table
-    * per route (`batch` becomes a discovered partition column). On
-    * Delta this becomes one multi-table transaction; the per-batch
-    * directory is the swap point.
+    * are published to `basePath/<route>/batch=<id>/` by
+    * [[graft.io.Publish]], not blind-appended to the route root — a
+    * crash after some routes wrote but before the checkpoint commit
+    * replays the batch, and the rerun replaces the same per-batch
+    * directories with the same deterministic rows instead of
+    * duplicating them (routing is a pure function of the batch). A
+    * replay whose write fails leaves the previous `batch=<id>` in
+    * place. Readers see one partitioned table per route (`batch`
+    * becomes a discovered partition column). On Delta this becomes one
+    * multi-table transaction; the per-batch directory is the swap
+    * point.
     */
   def routedSink(df: DataFrame, routes: Seq[(String, Column)],
-      basePath: String, checkpoint: String): DataStreamWriter[Row] =
+      basePath: String, checkpoint: String): DataStreamWriter[Row] = {
+    // a NULL predicate must mean "did not match", not "vanish":
+    // un-coalesced, filter(pred) drops the row from its own route
+    // AND the !pred guards stay NULL for every later route and the
+    // dead-letter fold — the row would land nowhere, breaking the
+    // unmatched-rows-always-reach-dead_letter contract (e.g. a
+    // nullable score column). Coalesce each predicate to false.
+    val preds = routes.map { case (n, p) => n -> coalesce(p, lit(false)) }
+    val guarded = preds.zipWithIndex.map { case ((name, pred), i) =>
+      name -> preds.take(i).map(_._2)
+        .foldLeft(pred)((p, earlier) => p && !earlier)
+    }
+    val dead = preds.map(_._2)
+      .foldLeft(lit(true))((p, r) => p && !r)
     eachBatch(df, checkpoint, OutputMode.Append) { (batch, batchId) =>
       val b = batch.persist()
-      // a NULL predicate must mean "did not match", not "vanish":
-      // un-coalesced, filter(pred) drops the row from its own route
-      // AND the !pred guards stay NULL for every later route and the
-      // dead-letter fold — the row would land nowhere, breaking the
-      // unmatched-rows-always-reach-dead_letter contract (e.g. a
-      // nullable score column). Coalesce each predicate to false.
-      val preds = routes.map { case (n, p) => n -> coalesce(p, lit(false)) }
-      val guarded = preds.zipWithIndex.map { case ((name, pred), i) =>
-        name -> preds.take(i).map(_._2)
-          .foldLeft(pred)((p, earlier) => p && !earlier)
-      }
-      val dead = preds.map(_._2)
-        .foldLeft(lit(true))((p, r) => p && !r)
-      (guarded :+ ("dead_letter" -> dead)).foreach { case (name, pred) =>
+      try (guarded :+ ("dead_letter" -> dead)).foreach { case (name, pred) =>
         val rows = b.filter(pred)
         if (!rows.isEmpty)
-          rows.write.mode("overwrite")
-            .parquet(s"$basePath/$name/batch=$batchId")
-      }
-      b.unpersist()
+          Publish(s"$basePath/$name/batch=$batchId")(
+            rows.write.mode("overwrite").parquet(_))
+      } finally b.unpersist()
     }
+  }
 
   /** Streaming CDC apply sink — [[upsertSink]] completed with the
     * DELETE branch: the stream carries Debezium-shaped row images

@@ -8,7 +8,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps each consolidated job in its one home: directory renames and
-  * deletes in [[graft.io.Publish]], session settings in [[Session]],
+  * deletes in [[graft.io.Publish]], derived-artifact freshness in
+  * [[graft.io.DerivedCache]], SF path segments in [[graft.io.Scratch]],
+  * session settings in [[Session]],
   * streaming writers in [[graft.stream.Pipelines]], environment reads in
   * the mains and deployment paths. Scans the library sources as text.
   */
@@ -32,6 +34,22 @@ class SourceGuardSpec extends AnyFunSuite {
   test("renameTo( appears only in graft/io/Publish.scala") {
     val hits = filesContaining("renameTo(")
     assert(hits == Set("graft/io/Publish.scala"), hits.toString)
+  }
+
+  test("no directory move outside Publish: Files.move appears nowhere in the library") {
+    val hits = filesContaining("Files.move")
+    assert(hits.isEmpty, hits.toString)
+  }
+
+  test("the SF path segment is derived only in graft/io/Scratch.scala") {
+    val hits = filesContaining(""".replace(".", "_")""")
+    assert(hits == Set("graft/io/Scratch.scala"), hits.toString)
+  }
+
+  test("derived artifacts are fingerprinted only inside DerivedCache (and the reference-query memo)") {
+    val hits = filesContaining("DerivedCache.fingerprint(")
+    assert(hits.subsetOf(Set("graft/io/DerivedCache.scala",
+      "graft/ops/ReferenceQueries.scala")), hits.toString)
   }
 
   test("no hand-rolled delete: File.delete() appears nowhere in the library") {
