@@ -72,6 +72,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // and rewrites the row_number()-window top-k idiom into it
     e.injectPlannerStrategy(_ => graft.plans.GroupTopKStrategy)
     e.injectOptimizerRule(_ => graft.plans.GroupTopKRewrite)
+    // a streaming dedup over one state partition coalesces its input
+    // instead of shuffling it: one stage per micro-batch
+    e.injectOptimizerRule(_ => graft.plans.SingleStateCoalesce)
     // as-of join (api.Joins.asOfJoin): one merge pass over co-partitioned
     // sorted sides instead of a candidate-pair explosion
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)

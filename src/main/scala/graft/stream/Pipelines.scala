@@ -28,6 +28,19 @@ import graft.model.Schemas
   *  - sinks are parquet (Delta is a cloud-only jar); the writer shape is
   *    identical, so a Delta/Kafka sink is a format swap.
   *
+  * Each micro-batch pays a fixed floor: the offsets WAL, source and sink
+  * logs, state deltas and the commit log are each a file created and
+  * renamed into the checkpoint. Two things keep it low:
+  *  - the engine's `core-site.xml` binds the local file system to
+  *    [[graft.io.LocalFs]], which sets permissions and reads links
+  *    in-process; stock Hadoop without its native library starts a
+  *    `chmod` or `readlink` process for each, ≈60 per entity query and
+  *    micro-batch;
+  *  - with one state partition (`spark.sql.shuffle.partitions` = 1),
+  *    [[graft.plans.SingleStateCoalesce]] coalesces a dedup's input
+  *    instead of shuffling it, so a micro-batch runs as one stage. The
+  *    trade: one task reads and cleans the whole micro-batch.
+  *
   * Every `foreachBatch` sink runs through one checkpointed writer
   * (`eachBatch`) and gets exactly-once output under crash and replay
   * from one of two protocols, both committed by [[graft.io.Publish]]:

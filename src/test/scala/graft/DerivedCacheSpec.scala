@@ -151,12 +151,14 @@ class DerivedCacheSpec extends AnyFunSuite {
       ids.map(i => (i, i * 1000000000L, i, "view", 1.0, "{}"))
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    writeEvents(Seq(1L, 2L))
-    val loc = graft.ops.JoinOps.ensurePartitioned(spark, dir)
-    assert(spark.read.parquet(loc).count() == 2L)
-    writeEvents(Seq(3L, 4L, 5L))
-    assert(spark.read.parquet(graft.ops.JoinOps.ensurePartitioned(spark, dir))
-      .count() == 3L, "stale partitioned layout served after regeneration")
+    try {
+      writeEvents(Seq(1L, 2L))
+      val loc = graft.ops.JoinOps.ensurePartitioned(spark, dir)
+      assert(spark.read.parquet(loc).count() == 2L)
+      writeEvents(Seq(3L, 4L, 5L))
+      assert(spark.read.parquet(graft.ops.JoinOps.ensurePartitioned(spark, dir))
+        .count() == 3L, "stale partitioned layout served after regeneration")
+    } finally TestSpark.dropCache("partitioned", dir)
   }
 
   test("media staging clears stale payload files on rebuild") {
@@ -165,15 +167,17 @@ class DerivedCacheSpec extends AnyFunSuite {
       ids.map(i => (i, s"text-$i", "en", "web", 6L))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    writeDocs(Seq(10L, 20L, 11L))
-    val out = graft.ops.Multimodal.ensureMediaFiles(spark, dir)
-    def bins(): Set[String] =
-      Option(new java.io.File(out).listFiles()).getOrElse(Array.empty)
-        .map(_.getName).filter(_.endsWith(".bin")).toSet
-    assert(bins() == Set("media_10.bin", "media_20.bin"))
-    writeDocs(Seq(30L, 31L))
-    graft.ops.Multimodal.ensureMediaFiles(spark, dir)
-    assert(bins() == Set("media_30.bin"),
-      "stale media payloads leaked into the staging dir after regeneration")
+    try {
+      writeDocs(Seq(10L, 20L, 11L))
+      val out = graft.ops.Multimodal.ensureMediaFiles(spark, dir)
+      def bins(): Set[String] =
+        Option(new java.io.File(out).listFiles()).getOrElse(Array.empty)
+          .map(_.getName).filter(_.endsWith(".bin")).toSet
+      assert(bins() == Set("media_10.bin", "media_20.bin"))
+      writeDocs(Seq(30L, 31L))
+      graft.ops.Multimodal.ensureMediaFiles(spark, dir)
+      assert(bins() == Set("media_30.bin"),
+        "stale media payloads leaked into the staging dir after regeneration")
+    } finally TestSpark.dropCache("media", dir)
   }
 }

@@ -214,13 +214,15 @@ class GraphSpec extends AnyFunSuite {
         .select(col("pa").cast("long"), col("pb").cast("long"))
         .as[(Long, Long)].collect().toSet
 
-    // pa ≡ pb (mod 10) pairs survive the sparsifier: (10,20), (3,13)
-    writeLineitem(Seq((1L, 10L), (1L, 20L), (1L, 7L), (2L, 3L), (2L, 13L)))
-    assert(cached() == inline() && cached() == Set((10L, 20L), (3L, 13L)))
-    // regenerated source (different rows) must invalidate the cache
-    writeLineitem(Seq((5L, 40L), (5L, 50L)))
-    assert(cached() == Set((40L, 50L)), "stale edge cache served after " +
-      "the source lineitem was regenerated")
+    try {
+      // pa ≡ pb (mod 10) pairs survive the sparsifier: (10,20), (3,13)
+      writeLineitem(Seq((1L, 10L), (1L, 20L), (1L, 7L), (2L, 3L), (2L, 13L)))
+      assert(cached() == inline() && cached() == Set((10L, 20L), (3L, 13L)))
+      // regenerated source (different rows) must invalidate the cache
+      writeLineitem(Seq((5L, 40L), (5L, 50L)))
+      assert(cached() == Set((40L, 50L)), "stale edge cache served after " +
+        "the source lineitem was regenerated")
+    } finally TestSpark.dropCache("edges", dir)
   }
 
   test("hash-directed walks follow the scalar md5 argmin (g15 kernel)") {

@@ -2,13 +2,22 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Repartition
+import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.streaming.operators.stateful.BaseStreamingDeduplicateExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.clean.Cleaners
 import graft.fixtures.PinFixtures
-import graft.io.Publish
+import graft.io.{Publish, Sources}
 import graft.model.Schemas
 import graft.stream.Pipelines
 
@@ -2241,6 +2250,149 @@ class StreamingSpec extends AnyFunSuite {
     Pipelines.applyMinViewBatch(spark, table,
       Seq(("a", 0L)).toDF("cell", "register"), "cell", 1L)
     assert(view() == Map("a" -> 3L, "b" -> 7L, "c" -> 1L))
+  }
+
+  /** One entity stream: its raw fixture and schema, its streaming
+    * cleaner, and the batch cleaner it must equal (the streams' pin fill
+    * is the constant 1000).
+    */
+  private case class Entity(name: String, raw: SparkSession => DataFrame,
+      schema: StructType, stream: DataFrame => DataFrame,
+      batch: DataFrame => DataFrame, eventTime: Option[String])
+
+  private val entities = Seq(
+    Entity("pin", PinFixtures.pinRaw(_), Schemas.pinRaw, Pipelines.cleanPinStream,
+      Cleaners.cleanPin(_, fillFollower = Some(1000)), None),
+    Entity("geo", PinFixtures.geoRaw(_), Schemas.geoRaw, Pipelines.cleanGeoStream(_),
+      Cleaners.cleanGeo(_), Some("timestamp")),
+    Entity("user", PinFixtures.userRaw(_), Schemas.userRaw, Pipelines.cleanUserStream(_),
+      Cleaners.cleanUser(_), Some("date_joined")))
+
+  /** Append `raw` to `dir` as one file of envelope rows. */
+  private def appendEnvelopes(dir: String, raw: DataFrame): Unit =
+    PinFixtures.envelope(raw).coalesce(1).write.mode("append").json(dir)
+
+  /** The stream of `e` over the envelope files in `in`, one file per
+    * micro-batch, into a parquet sink under `out`.
+    */
+  private def entitySink(session: SparkSession, e: Entity, in: String, out: String) = {
+    val p = Sources.IoProfile.localFiles(in)
+    Pipelines.sink(
+      e.stream(Sources.streamEnvelopeVia(session,
+        p.copy(sourceOptions = p.sourceOptions + ("maxFilesPerTrigger" -> "1")))),
+      s"$out/sink", s"$out/ckpt")
+  }
+
+  test("the clean*Stream sinks start no process: checkpoint, state and sink I/O stay in the JVM") {
+    val root = tmp("graft_nofork")
+    entities.foreach { e =>
+      val raw = e.raw(spark)
+      (1 to 2).foreach(_ => appendEnvelopes(s"$root/in/${e.name}", raw))
+    }
+    def drive(run: String): Unit = entities.foreach { e =>
+      Pipelines.runToCompletion(
+        entitySink(spark, e, s"$root/in/${e.name}", s"$root/$run/${e.name}"))
+    }
+    drive("warm") // one-time process starts (Hadoop's shell probes) happen here
+    val file = java.nio.file.Paths.get(root, "process_start.jfr")
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    try drive("measured")
+    finally { rec.stop(); rec.dump(file); rec.close() }
+    def frames(ev: jdk.jfr.consumer.RecordedEvent): Seq[String] =
+      Option(ev.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
+        .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
+    // Spark deletes a dropped session's artifact directory with `rm -rf`
+    // when the GC finds the session (each query runs on a clone of its
+    // own). That happens on the JDK's cleaner thread, once per dropped
+    // clone and whenever the GC runs: not part of a micro-batch.
+    val starts = jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala
+      .filterNot(frames(_).exists(_.startsWith("jdk.internal.ref.CleanerImpl.")))
+    assert(starts.isEmpty, s"${starts.size} processes started, e.g. " +
+      starts.take(3).map { ev =>
+        val site = frames(ev).filterNot(_.startsWith("java.")).take(4).mkString(" < ")
+        s"`${ev.getString("command")}` from $site"
+      }.mkString("; "))
+  }
+
+  /** A session on the shared context whose streams keep their state in
+    * one partition, as a small per-stream deployment does.
+    */
+  private lazy val onePartition: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "1")
+    s
+  }
+
+  /** The input plan of each streaming dedup in the query's last batch. */
+  private def dedupInputs(q: StreamingQuery): Seq[SparkPlan] =
+    q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      .collect { case d: BaseStreamingDeduplicateExec => d.child }
+
+  private def coalesced(input: SparkPlan): Boolean =
+    input.exists(_.isInstanceOf[CoalesceExec]) &&
+      !input.exists(_.isInstanceOf[ShuffleExchangeExec])
+
+  test("one state partition: each clean*Stream dedup reads a coalesce, no shuffle; with 4 partitions and in batch, the plan is unchanged") {
+    val bounded = Entity("pin_bounded", PinFixtures.pinRaw(_), Schemas.pinRaw,
+      Pipelines.cleanPinStreamBounded(_), identity, None)
+    for ((session, one) <- Seq(onePartition -> true, spark -> false);
+         e <- entities :+ bounded) {
+      val root = tmp("graft_coalesce")
+      appendEnvelopes(s"$root/in", e.raw(session))
+      val q = entitySink(session, e, s"$root/in", root).start()
+      q.awaitTermination()
+      val inputs = dedupInputs(q)
+      assert(inputs.size == 1, s"${e.name}: ${inputs.size} dedups")
+      if (one) assert(coalesced(inputs.head), s"${e.name}:\n${inputs.head}")
+      else assert(!inputs.head.exists(_.isInstanceOf[CoalesceExec]) &&
+        inputs.head.exists(_.isInstanceOf[ShuffleExchangeExec]), s"${e.name}:\n${inputs.head}")
+    }
+    val batch = PinFixtures.pinRaw(onePartition).dropDuplicates().queryExecution
+    assert(!batch.optimizedPlan.exists(_.isInstanceOf[Repartition]), batch.optimizedPlan.toString)
+    assert(!batch.executedPlan.exists(_.isInstanceOf[CoalesceExec]), batch.executedPlan.toString)
+  }
+
+  test("one state partition: a restart from the checkpoint drops a repeated first-run row and equals batch cleaning") {
+    val root = tmp("graft_coalesce_restart")
+    entities.foreach { e =>
+      val in = s"$root/in/${e.name}"
+      val out = s"$root/${e.name}"
+      val raw = e.raw(onePartition)
+      def frame(rows: Seq[Row]): DataFrame =
+        onePartition.createDataFrame(onePartition.sparkContext.parallelize(rows, 1), raw.schema)
+      val rows = raw.collect().toSeq
+      // the second run's new rows carry the three latest event times, so
+      // none is behind the first run's watermark
+      val (first, later) = e.eventTime match {
+        case Some(c) =>
+          val at = (r: Row) => r.getTimestamp(r.fieldIndex(c)).getTime
+          val latest = rows.map(at).distinct.sorted.takeRight(3).toSet
+          rows.partition(r => !latest(at(r)))
+        case None => rows.splitAt(rows.size / 2)
+      }
+      // the first run's latest row: still in the dedup state after it
+      val repeated = e.eventTime.fold(first.head)(c =>
+        first.maxBy(r => r.getTimestamp(r.fieldIndex(c)).getTime))
+
+      appendEnvelopes(in, frame(first))
+      val q1 = entitySink(onePartition, e, in, out).start()
+      q1.awaitTermination()
+      appendEnvelopes(in, frame(repeated +: later))
+      val q2 = entitySink(onePartition, e, in, out).start()
+      q2.awaitTermination()
+      assert(Pipelines.committedBatches(s"$out/ckpt").size >= 2, e.name)
+      assert(dedupInputs(q2).forall(coalesced), s"${e.name}: the restart lost the coalesce")
+
+      val envelope = onePartition.read
+        .schema(StructType(Seq(StructField("data", StringType)))).json(in)
+      val want = e.batch(Pipelines.decode(envelope, e.schema))
+      val got = onePartition.read.parquet(s"$out/sink").select(want.columns.toSeq.map(col): _*)
+      assert(got.count() == want.count(),
+        s"${e.name}: sink ${got.count()} rows, batch cleaning ${want.count()}")
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, e.name)
+    }
   }
 }
 

@@ -28,4 +28,15 @@ object TestSpark {
   }
 
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Remove the derived cache `Scratch.cache(kind, dir)` a spec built
+    * from its temp fixture `dir`, with its lock file: the cache path is
+    * keyed by the fixture's name, so no later run reads it again.
+    */
+  def dropCache(kind: String, dir: String): Unit = {
+    val loc = java.nio.file.Paths.get(graft.io.Scratch.cache(kind, dir))
+    graft.io.Publish.deleteTree(loc.toString)
+    java.nio.file.Files.deleteIfExists(loc.resolveSibling(s".${loc.getFileName}.lock"))
+    ()
+  }
 }
