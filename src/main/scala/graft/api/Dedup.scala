@@ -2,8 +2,10 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 import graft.api.Checkpoints.LineageOps
 
+import graft.expr.ShingleSketch.{common_count, hash_sketch, shingle_sketch}
 import graft.expr.WordShingles.word_shingles
 
 /** Public DataFrame-level deduplication API — the library surface a
@@ -14,13 +16,36 @@ import graft.expr.WordShingles.word_shingles
   * and returns a plain DataFrame, so it composes with arbitrary
   * upstream cleaning and downstream joins.
   *
-  * Caching contract: functions whose plan reuses a subtree more than
-  * once ([[nearDupPairs]], [[tokenJaccardPairs]]) persist that subtree
-  * at MEMORY_AND_DISK. The blocks stay cached until the caller drops
-  * them — after the terminal action, call `spark.catalog.clearCache()`
-  * (or `unpersist` the returned frame's cached lineage) in long-lived
-  * applications; the bundled Bench/Verify drivers do exactly that
-  * between queries.
+  * Caching contract: [[nearDupPairs]] and [[containmentPairs]] each run
+  * ONE eager lineage cut ([[Checkpoints.cut]]) before they return —
+  * over the per-document sketch frame that the band join, both verify
+  * sides and the member expansion all read — and leave everything else
+  * lazy, so their jobs at call time are that cut's. The cut's blocks
+  * live as long as the returned frame's lineage needs them. Functions
+  * that persist a reused subtree instead ([[tokenJaccardPairs]],
+  * [[lshCalibration]], the incremental probes) keep it cached until the
+  * caller drops it: after the terminal action, call
+  * `spark.catalog.clearCache()` (or `unpersist` the returned frame's
+  * cached lineage) in long-lived applications; the bundled Bench/Verify
+  * drivers do exactly that between queries. [[nearDupClusters]] runs
+  * one collect at call time when the pair graph is small.
+  *
+  * Hash width: the banded pair functions verify candidates on each
+  * shingle's full 128-bit md5 ([[graft.expr.ShingleSketch]]), so their
+  * jaccard and containment are exact up to md5 collisions — below
+  * m²/2^129 for a corpus of m distinct shingles (under 10^-12 at
+  * m = 10^13). The signatures use the two 60-bit halves of the same
+  * digests and are bit-identical to [[minhashSignatures]].
+  *
+  * Pair-row width at 100 TB: each verified candidate pair carries both
+  * documents' sorted hash arrays, 16 bytes per distinct shingle, so a
+  * pair row is 16·(na + nb) bytes plus ids — the same shingle volume
+  * the shingle-grain verify joins used to move per candidate, in one
+  * row instead of na + nb rows. The bounds are the caller's:
+  * document length (chunk long documents upstream, e.g.
+  * [[Corpus.chunk]]: a 10k-token chunk is ~160 KB per side) and
+  * `maxShingleFreq`, which removes boilerplate shingles from the arrays
+  * before banding and so also removes the hub candidates they cause.
   */
 object Dedup {
 
@@ -192,130 +217,143 @@ object Dedup {
     array(keys: _*)
   }
 
-  /** Shared banded-LSH candidate + verify machinery: capped exploded
-    * shingles -> signature (+ size) -> band self-join -> exact
-    * common-shingle counts. Returns one row per candidate pair:
+  /** Per-document shingle sketches, one row per document that keeps at
+    * least one shingle: `keep` columns (the id first) plus `_n`
+    * (distinct shingles), `_mh` (signature array) and `_hs` (sorted
+    * 128-bit shingle hashes, two longs each —
+    * [[graft.expr.ShingleSketch]]). Documents with fewer than n tokens
+    * have no sketch and drop out.
+    *
+    * With `maxShingleFreq`, each (document, hash) is counted once per
+    * document that carries it; hashes seen in more than `cap` of the
+    * input rows are removed with an anti join (the over-cap set is
+    * small for a boilerplate cap, so it broadcasts and the viral keys
+    * never become shuffle keys on the occurrence side), and the
+    * survivors regroup per document, where the signature is re-derived
+    * from the hashes alone. A document whose every shingle is capped
+    * drops out.
+    */
+  private def sketches(docs: DataFrame, keep: Seq[String], textCol: String,
+      n: Int, seeds: Int, maxShingleFreq: Option[Long]): DataFrame = {
+    val keepCols = keep.map(col)
+    def split(sk: DataFrame): DataFrame = sk.select(keepCols ++ Seq(
+      (size(col("_sk.hs")) / 2).cast("long").as("_n"),
+      col("_sk.mh").as("_mh"), col("_sk.hs").as("_hs")): _*)
+    val sk = docs.select(keepCols :+ shingle_sketch(col(textCol), n, seeds).as("_sk"): _*)
+      .filter(col("_sk").isNotNull)
+    maxShingleFreq match {
+      case None => split(sk)
+      case Some(cap) =>
+        val id = col(keep.head)
+        val occ = sk.select(id, col("_sk.hs").as("_hs"),
+            posexplode(col("_sk.hs")).as(Seq("_p", "_hi")))
+          .filter(col("_p") % 2 === 0)
+          .select(id, col("_hi"), element_at(col("_hs"), col("_p") + 2).as("_lo"))
+        val over = occ.groupBy("_hi", "_lo").agg(count(lit(1)).as("_f"))
+          .filter(col("_f") > cap).select("_hi", "_lo")
+        val capped = occ.join(over, Seq("_hi", "_lo"), "left_anti")
+          .groupBy(id).agg(collect_list(struct(col("_hi"), col("_lo"))).as("_l"))
+          .select(id, hash_sketch(col("_l"), seeds).as("_sk"))
+        split(docs.select(keepCols: _*).join(capped, keep.head))
+    }
+  }
+
+  /** Shared banded-LSH candidate + verify machinery over a [[sketches]]
+    * frame: band self-join -> distinct candidates -> one side join per
+    * end carrying (n, hashes) -> optional length filter -> one merge
+    * count per pair. Returns one row per verified candidate pair:
     * (doc_a, doc_b, n_common, na, nb), id-ordered — every pair metric
     * (jaccard, containment) is a pure projection of these three
     * integers, which is why the metric-specific public functions are
     * one select each.
+    *
+    * `minLengthRatio` = t drops pairs with min(na, nb) < t·max(na, nb)
+    * before the merge: jaccard ≤ min/max, so no pair with jaccard ≥ t
+    * is lost (the filter compares against floor(t·max), so floating
+    * point can only keep more). Containment has no length bound.
     */
-  private def bandedCommonCounts(docs: DataFrame, idCol: String,
-      textCol: String, n: Int, seeds: Int, bandSize: Int,
-      maxShingleFreq: Option[Long]): (DataFrame, DataFrame) = {
-    // the exploded shingle set feeds the signature, the sizes, and the
-    // verify join (twice) — eagerly checkpointed so the explode runs
-    // once AND the plan under every reference is a block scan, not a
-    // replicated explode subtree (lazy persist caches execution but
-    // leaves the plan tree to grow with each reuse)
-    val shsRaw = shingles(docs, idCol, textCol, n)
-    val shs = (maxShingleFreq match {
-      case Some(cap) =>
-        val ok = shsRaw.groupBy("sh").agg(count(lit(1)).as("_f"))
-          .filter(col("_f") <= cap).select("sh")
-        shsRaw.join(ok, "sh").select(col(idCol), col("sh"))
-      case None => shsRaw
-    }).cutLineage
-    // one shuffle on the doc key yields the signature AND the shingle
-    // count (the later metric denominators) — no separate sizes pass.
-    // (Probed this round: collecting the shingle SET here and verifying
-    // candidates with `size(array_intersect)` at pair grain measured a
-    // wash-to-regression at sf0.1 — per-pair string-array intersection
-    // costs more CPU than the codegen'd occurrence-grain hash joins
-    // save in exchanges. Negative result recorded so it isn't re-tried;
-    // see OPTIMIZATION_r16.md.)
-    val aggs = minAggs(seeds) :+ count(lit(1)).as("n")
-    val sig = withHashHalves(shs, idCol)
-      .groupBy(idCol).agg(aggs.head, aggs.tail: _*).cutLineage
-    val bands = sig.select(col(idCol),
-      explode(bandKeyArray(seeds, bandSize)).as("bk"))
+  private def bandedCommonCounts(sk: DataFrame, idCol: String, seeds: Int,
+      bandSize: Int, minLengthRatio: Option[Double]): DataFrame = {
+    val bands = sk
+      .select(col(idCol) +: (0 until seeds).map(i =>
+        element_at(col("_mh"), i + 1).as(s"mh$i")): _*)
+      .select(col(idCol), explode(bandKeyArray(seeds, bandSize)).as("bk"))
     val cand = bands.as("a")
       .join(bands.as("b"),
         col("a.bk") === col("b.bk") && col(s"a.$idCol") < col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("doc_a"), col(s"b.$idCol").as("doc_b"))
       .distinct()
-    val sizes = sig.select(col(idCol), col("n"))
-    val common = cand
-      .join(shs.as("s1"), col(s"s1.$idCol") === col("doc_a"))
-      .join(shs.as("s2"),
-        col(s"s2.$idCol") === col("doc_b") && col("s2.sh") === col("s1.sh"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_common"))
-    val counts = common
-      .join(sizes.as("sa"), col(s"sa.$idCol") === col("doc_a"))
-      .join(sizes.as("sb"), col(s"sb.$idCol") === col("doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("n_common"),
-        col("sa.n").as("na"), col("sb.n").as("nb"))
-    (counts, sizes)
+    def side(end: String) = sk.select(col(idCol).as(s"doc_$end"),
+      col("_n").as(s"n$end"), col("_hs").as(s"_h$end"))
+    val sided = cand.join(side("a"), "doc_a").join(side("b"), "doc_b")
+    minLengthRatio
+      .fold(sided)(t => sided.filter(least(col("na"), col("nb")) >=
+        floor(lit(t) * greatest(col("na"), col("nb")))))
+      .select(col("doc_a"), col("doc_b"),
+        common_count(col("_ha"), col("_hb")).cast("long").as("n_common"),
+        col("na"), col("nb"))
   }
+
+  private val jaccardOfCounts: Column = col("n_common").cast("double") /
+    (col("na") + col("nb") - col("n_common"))
 
   /** MinHash-LSH near-duplicate pairs with exact-jaccard verification:
     * (id_a, id_b, jaccard), id_a < id_b, jaccard >= threshold.
     *
     * `seeds` hashes banded into `seeds/bandSize` bands; a pair becomes a
     * candidate when any band matches, then its true shingle jaccard is
-    * computed. The band join keys are uniform hashes (no hot
-    * partitions); `maxShingleFreq` drops degenerate shingles (boiler-
-    * plate shared by a large fraction of a 100 TB corpus) before the
-    * verify join.
+    * computed by merging the two documents' sorted shingle hashes. The
+    * band join keys are uniform hashes (no hot partitions);
+    * `maxShingleFreq` drops degenerate shingles (boilerplate shared by a
+    * large fraction of a 100 TB corpus) before signatures and verify.
     *
-    * Exact duplicates are collapsed BEFORE shingling: identical texts
-    * (by content hash) send one representative (min id) through the
-    * shingle/signature/band/verify pipeline, and verified pairs expand
-    * back to members afterward — members of the same group pair up at
-    * jaccard 1.0, members of two verified groups inherit the
-    * representatives' jaccard (identical text ⇒ identical shingle set).
-    * At 100 TB this is the difference between linear and quadratic: a
-    * k-copy boilerplate family costs the band join and the verify join
-    * ONE document instead of k (and k² candidate collisions); the O(k²)
-    * pair expansion is output-inherent and happens as a cheap post-join
-    * on the membership table, never against the shingle store.
-    * Consequence: `maxShingleFreq` counts a shingle's document
-    * frequency over DISTINCT texts, so mass-copying a page cannot push
-    * its shingles over the boilerplate cap.
+    * Exact duplicates are collapsed BEFORE shingling: one `groupBy` on
+    * md5(text) yields each group's representative (min id), its member
+    * ids and its sketch, so one document per distinct text goes through
+    * the band/verify pipeline, and verified pairs expand back to members
+    * afterward — members of the same group pair up at jaccard 1.0,
+    * members of two verified groups inherit the representatives'
+    * jaccard (identical text ⇒ identical shingle set). At 100 TB this is
+    * the difference between linear and quadratic: a k-copy boilerplate
+    * family costs the band join and the verify ONE document instead of
+    * k (and k² candidate collisions); the O(k²) pair expansion is
+    * output-inherent and explodes the group's member list (8 bytes per
+    * copy in the representative's row), never the sketches.
+    * Consequence: `maxShingleFreq` counts a shingle's document frequency
+    * over DISTINCT texts, so mass-copying a page cannot push its
+    * shingles over the boilerplate cap.
     */
   def nearDupPairs(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 3, seeds: Int = 8,
       bandSize: Int = 2, threshold: Double = 0.5,
       maxShingleFreq: Option[Long] = None): DataFrame = {
-    // eagerly checkpointed, not persisted: the membership and group
-    // frames are referenced 3-4 times each across the expansion joins,
-    // and a lazy persist leaves the md5 subtree REPLICATED in the plan
-    // under every reference (~275 Exchanges in d04's audited plan
-    // string; execution was cached, planning was not). Both frames are
-    // (id, hash) grain — tiny next to the shingle work this function
-    // exists to bound.
-    val mem = docs.select(col(idCol).as("_m_id"), md5(col(textCol)).as("_th"))
-      .cutLineage
-    val grp = mem.groupBy("_th")
-      .agg(min(col("_m_id")).as("_rep"), count(lit(1)).as("_k"))
-      .cutLineage
-    val repDocs = docs.join(grp.select(col("_rep")), col(idCol) === col("_rep"))
-      .select(col(idCol), col(textCol))
-    val (counts, sizes) =
-      bandedCommonCounts(repDocs, idCol, textCol, n, seeds, bandSize, maxShingleFreq)
-    val j = col("n_common").cast("double") /
-      (col("na") + col("nb") - col("n_common"))
-    val repPairs = counts
-      .select(col("doc_a"), col("doc_b"), j.as("jaccard"))
+    // the one eager cut: the per-representative frame is read by the
+    // band self-join, both verify sides and the member expansion, and a
+    // lazy persist would leave its md5/sketch subtree replicated under
+    // every reference in the plan. It carries each group's member ids,
+    // so nothing after it reads `docs` again.
+    val reps = sketches(
+      docs.groupBy(md5(col(textCol)))
+        .agg(min(col(idCol)).as(idCol), collect_list(col(idCol)).as("_ms"),
+          min(col(textCol)).as(textCol)),
+      Seq(idCol, "_ms"), textCol, n, seeds, maxShingleFreq).cutLineage
+    val repPairs = bandedCommonCounts(reps, idCol, seeds, bandSize, Some(threshold))
+      .select(col("doc_a"), col("doc_b"), jaccardOfCounts.as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    val memRep = mem.join(grp, "_th").select(col("_m_id"), col("_rep"))
+    // members of the groups whose representative kept a sketch (no
+    // other group can pair: the uncollapsed pipeline would never have
+    // banded its copies either)
+    def members(end: String, groups: DataFrame = reps) = groups.select(
+      col(idCol).as(s"_r$end"), explode(col("_ms")).as(s"_i$end"))
     val cross = repPairs
-      .join(memRep.select(col("_rep").as("_ra"), col("_m_id").as("_ia")),
-        col("_ra") === col("doc_a"))
-      .join(memRep.select(col("_rep").as("_rb"), col("_m_id").as("_ib")),
-        col("_rb") === col("doc_b"))
+      .join(members("a"), col("_ra") === col("doc_a"))
+      .join(members("b"), col("_rb") === col("doc_b"))
       .select(least(col("_ia"), col("_ib")).as("doc_a"),
         greatest(col("_ia"), col("_ib")).as("doc_b"), col("jaccard"))
-    // within-group pairs exist only where the representative survived
-    // shingling + the frequency cap (otherwise the uncollapsed pipeline
-    // would never have banded the copies either)
-    val liveMem = mem
-      .join(grp.filter(col("_k") > 1), "_th")
-      .join(sizes.select(col(idCol).as("_live")), col("_rep") === col("_live"))
-      .select(col("_th"), col("_m_id"))
-    val within = liveMem.select(col("_th").as("_t1"), col("_m_id").as("_ia"))
-      .join(liveMem.select(col("_th").as("_t2"), col("_m_id").as("_ib")),
-        col("_t1") === col("_t2") && col("_ia") < col("_ib"))
+    val copies = reps.filter(size(col("_ms")) > 1)
+    val within = members("a", copies)
+      .join(members("b", copies),
+        col("_ra") === col("_rb") && col("_ia") < col("_ib"))
       .select(col("_ia").as("doc_a"), col("_ib").as("doc_b"),
         lit(1.0).as("jaccard"))
     cross.unionByName(within)
@@ -333,19 +371,19 @@ object Dedup {
     * verify metric differs, so a contained-but-not-similar pair must
     * still collide on a band to be seen — the documented recall trade
     * of LSH-by-jaccard candidates (full-recall containment needs an
-    * inclusion-probe index; out of scope).
+    * inclusion-probe index; out of scope). No length filter: a small
+    * document wholly inside a large one is the pair this function
+    * exists to find. One eager cut, over the per-document sketches.
     */
   def containmentPairs(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 3, seeds: Int = 8,
       bandSize: Int = 2, threshold: Double = 0.6,
       maxShingleFreq: Option[Long] = None): DataFrame = {
+    val sk = sketches(docs, Seq(idCol), textCol, n, seeds, maxShingleFreq).cutLineage
     val cont = col("n_common").cast("double") / least(col("na"), col("nb"))
-    val j = col("n_common").cast("double") /
-      (col("na") + col("nb") - col("n_common"))
-    bandedCommonCounts(docs, idCol, textCol, n, seeds, bandSize, maxShingleFreq)
-      ._1
+    bandedCommonCounts(sk, idCol, seeds, bandSize, None)
       .select(col("doc_a"), col("doc_b"), cont.as("containment"),
-        j.as("jaccard"))
+        jaccardOfCounts.as("jaccard"))
       .filter(col("containment") >= threshold)
   }
 
@@ -588,10 +626,18 @@ object Dedup {
   /** Transitive near-duplicate clusters from a pair list (e.g.
     * [[nearDupPairs]] output): every document that appears in a pair is
     * assigned the smallest doc id reachable through the pair graph —
-    * connected components via iterative min-label propagation, the
-    * standard way to turn pairwise near-dup evidence into "keep one per
-    * cluster" decisions (A~B and B~C must dedup to ONE survivor even
-    * when A~C was never tested).
+    * connected components, the standard way to turn pairwise near-dup
+    * evidence into "keep one per cluster" decisions (A~B and B~C must
+    * dedup to ONE survivor even when A~C was never tested).
+    *
+    * Small graphs first: one job collects at most `smallCutoff` + 1 raw
+    * edges (a limit under a single-partition exchange). When the edge
+    * list fits under the cutoff, union-find on the driver finishes it
+    * and the result is a local relation — per-round job scheduling
+    * costs more than the whole problem at this size, which every
+    * measured dedup graph has. Above the cutoff the distributed path
+    * runs, and the probe's evaluation of `pairs` is paid again there
+    * (hand over a cached or checkpointed pair frame to avoid that).
     *
     * Distributed shape — seed, CONTRACT, then iterate on the contracted
     * graph (the two-phase components algorithm of production systems):
@@ -606,15 +652,13 @@ object Dedup {
     *     clusters) it is orders of magnitude smaller than the input:
     *     every subsequent round now costs proportional to the
     *     CONTRACTED size, not E;
-    *  3. solve the label graph: when it has collapsed below
-    *     [[SmallLabelGraphEdges]] (every measured dedup graph does),
-    *     driver-side union-find — per-round job scheduling costs more
-    *     than the entire remaining problem. Otherwise iterate min-label
-    *     propagation (two hook hops + a pointer jump per round, unioned
-    *     into a single min-aggregate) until the label sum stops moving
-    *     — labels are doc ids and non-increasing, so the overflow-safe
-    *     DECIMAL(38,0) sum strictly decreases until the fixpoint,
-    *     replacing a prev-vs-next comparison join; lineage is cut with
+    *  3. solve the label graph: below the same cutoff, driver-side
+    *     union-find. Otherwise iterate min-label propagation (two hook
+    *     hops + a pointer jump per round, unioned into a single
+    *     min-aggregate) until the label sum stops moving — labels are
+    *     doc ids and non-increasing, so the overflow-safe DECIMAL(38,0)
+    *     sum strictly decreases until the fixpoint, replacing a
+    *     prev-vs-next comparison join; lineage is cut with
     *     localCheckpoint per round;
     *  4. relabel: components of the label graph key a broadcast-sized
     *     (usually) map from seed label to component minimum; one join
@@ -628,28 +672,99 @@ object Dedup {
     * all its neighbors, so label0(m) = m) — cluster ids are unchanged
     * by the rewrite.
     *
-    * If `maxRounds` is hit before the fixpoint, the labels are NOT yet
-    * connected components — this throws rather than silently returning
-    * partially-merged clusters.
+    * Pairs with a null end are ignored. `doc_id` and `cluster_id` keep
+    * the ids' input type on every path ([[Graph.components]] shares
+    * this function); ids of a non-integral type always take the
+    * distributed path. If `maxRounds` is hit before the fixpoint, the
+    * labels are NOT yet connected components — this throws rather than
+    * silently returning partially-merged clusters.
     *
     * Returns (doc_id, cluster_id, cluster_size).
     */
-  /** Label-graph size (in edges) below which [[nearDupClusters]]
-    * finishes on the driver with union-find instead of distributed
-    * rounds: ~16 MB collected, vs ~0.7 s of per-round scheduling for a
-    * graph this small. Above it, the distributed fixpoint runs.
-    */
-  private val SmallLabelGraphEdges = 1000000L
-
   def nearDupClusters(pairs: DataFrame, aCol: String = "doc_a",
       bCol: String = "doc_b", maxRounds: Int = 32,
-      // injectable so specs can force the distributed fixpoint path
-      // (the production cutoff leaves it unreachable at fixture sizes)
-      smallCutoff: Long = SmallLabelGraphEdges): DataFrame = {
+      // injectable so specs can force the distributed path (the
+      // production cutoff leaves it unreachable at fixture sizes)
+      smallCutoff: Long = SmallGraphEdges): DataFrame = {
+    val edges = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
+      .filter(col("u").isNotNull && col("v").isNotNull)
+    val idType = edges.unionByName(edges.select(col("v").as("u"), col("u").as("v")))
+      .schema("u").dataType
+    collectEdges(edges, idType, smallCutoff) match {
+      case Some(e) =>
+        val (nodes, roots) = unionFind(e)
+        val size = scala.collection.mutable.HashMap.empty[Long, Long]
+        roots.foreach(r => size(r) = size.getOrElse(r, 0L) + 1)
+        val sess = pairs.sparkSession
+        import sess.implicits._
+        nodes.indices.map(i => (nodes(i), roots(i), size(roots(i))))
+          .toDF("doc_id", "cluster_id", "cluster_size")
+          .select(col("doc_id").cast(idType), col("cluster_id").cast(idType),
+            col("cluster_size"))
+      case None => distributedClusters(edges, idType, maxRounds, smallCutoff)
+    }
+  }
+
+  /** Graph size (in edges) up to which [[nearDupClusters]] solves on the
+    * driver: ~16 MB of collected edges and a local result of at most
+    * 2M rows, vs ~0.7 s of per-round scheduling for a graph this small.
+    */
+  private val SmallGraphEdges = 1000000L
+
+  /** The (u, v) edges as one interleaved long array when the ids are
+    * integral and there are at most `cutoff` edges, else None — from ONE
+    * job: each partition keeps at most cutoff + 1 rows before a
+    * single-partition exchange, and the limit there reads no further.
+    */
+  private def collectEdges(edges: DataFrame, idType: DataType,
+      cutoff: Long): Option[Array[Long]] = idType match {
+    case ByteType | ShortType | IntegerType | LongType =>
+      val asLong = edges.select(col("u").cast("long"), col("v").cast("long"))
+      val limited =
+        if (cutoff >= Int.MaxValue - 1) asLong else asLong.limit(cutoff.toInt + 1)
+      val flat = limited.queryExecution.toRdd.mapPartitions { it =>
+        val b = Array.newBuilder[Long]
+        it.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+        Iterator.single(b.result())
+      }.collect().flatten
+      Some(flat).filter(_.length / 2 <= cutoff)
+    case _ => None
+  }
+
+  /** Union-find over an interleaved edge array: (sorted distinct nodes,
+    * component minimum per node). Index-based, so memory is a few
+    * primitive arrays per node and edge.
+    */
+  private def unionFind(edges: Array[Long]): (Array[Long], Array[Long]) = {
+    val nodes = edges.distinct.sorted
+    val parent = Array.tabulate(nodes.length)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    var i = 0
+    while (i < edges.length) {
+      val ra = find(java.util.Arrays.binarySearch(nodes, edges(i)))
+      val rb = find(java.util.Arrays.binarySearch(nodes, edges(i + 1)))
+      // the smaller index is the smaller id: roots stay component minima
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 2
+    }
+    (nodes, nodes.indices.map(k => nodes(find(k))).toArray)
+  }
+
+  /** The seed/contract/solve path of [[nearDupClusters]] for graphs
+    * above the driver cutoff. Returns (doc_id, cluster_id, cluster_size).
+    */
+  private def distributedClusters(edges: DataFrame,
+      idType: DataType, maxRounds: Int,
+      smallCutoff: Long): DataFrame = {
     // eager: evaluate the (often expensive) pair pipeline exactly once —
     // a lazy persist would race its two union branches in one job
-    val fwd = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-      .cutLineage
+    val fwd = edges.cutLineage
     // seed labels from the symmetric neighborhood minimum
     val labels0 = fwd
       .unionByName(fwd.select(col("v").as("u"), col("u").as("v")))
@@ -667,46 +782,23 @@ object Dedup {
       .select(col("lu").as("u"), col("lv").as("v"))
       .distinct()
       .cutLineage
-    val nC = eC.count()
-    val labels =
-      if (nC == 0) labels0 // every component collapsed at the seed
-      else if (nC <= smallCutoff) {
+    val comp = collectEdges(eC, idType, smallCutoff) match {
+      case Some(e) if e.isEmpty => None // every component collapsed at the seed
+      case Some(e) =>
         // the contracted label graph fits the driver: finish with
         // union-find instead of paying per-round job scheduling on a
-        // near-empty cluster — the bail-out every production CC takes
-        // once contraction has done its job. Bounded by construction:
-        // nC edges of two longs, <= ~16 MB at the cutoff.
-        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != r) {
-            val n = parent(c); parent(c) = r; c = n
-          }
-          r
-        }
-        eC.collect().foreach { e =>
-          val (ra, rb) = (find(e.getAs[Number](0).longValue()),
-            find(e.getAs[Number](1).longValue()))
-          if (ra != rb) { // min root keeps cluster_id = component min id
-            if (ra < rb) parent(rb) = ra else parent(ra) = rb
-          }
-        }
-        val comp = parent.keys.toSeq.map(k => (k, find(k)))
+        // near-empty cluster
+        val (nodes, roots) = unionFind(e)
         val sess = labels0.sparkSession
         import sess.implicits._
-        labels0.join(broadcast(comp.toDF("label", "_c")), Seq("label"), "left")
-          .select(col("doc_id"),
-            coalesce(col("_c"), col("label")).as("label"))
-      } else {
-        val comp = minLabelFixpoint(eC, maxRounds)
-        labels0
-          .join(comp.select(col("doc_id").as("label"), col("label").as("_c")),
-            Seq("label"), "left")
-          .select(col("doc_id"),
-            coalesce(col("_c"), col("label")).as("label"))
-      }
+        Some(broadcast(nodes.zip(roots).toSeq.toDF("label", "_c")
+          .select(col("label").cast(idType), col("_c").cast(idType))))
+      case None =>
+        Some(minLabelFixpoint(eC, maxRounds)
+          .select(col("doc_id").as("label"), col("label").as("_c")))
+    }
+    val labels = comp.fold(labels0)(c => labels0.join(c, Seq("label"), "left")
+      .select(col("doc_id"), coalesce(col("_c"), col("label")).as("label")))
     val sizes = labels.groupBy(col("label").as("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"))
     labels.select(col("doc_id"), col("label").as("cluster_id"))

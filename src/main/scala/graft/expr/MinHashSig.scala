@@ -1,68 +1,34 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** MinHash signature of a text column in one pass: `seeds` seeded
   * min-hashes over the distinct word n-gram shingles, Kirsch-
   * Mitzenmacher double-hashed from ONE md5 per shingle (h1/h2 = the
-  * two 60-bit hex halves; hash i = (h1 + i*h2) mod 2^60 — bit-identical
-  * to the SQL formulation the d03 oracle runs). Returns NULL when the
-  * text has fewer than n tokens (no shingles), mirroring the relational
-  * pipeline that drops such docs before the group-by.
+  * two 60-bit halves, the leading 15 hex digits of each digest half;
+  * hash i = (h1 + i*h2) mod 2^60 — bit-identical to the SQL formulation
+  * the d03 oracle runs). The hashing is [[ShingleSketch]]'s, so this is
+  * the signature the pair-grain near-dup verify bands on. Returns NULL
+  * when the text has fewer than n tokens (no shingles), mirroring the
+  * relational pipeline that drops such docs before the group-by.
   *
   * A signature is a PER-DOCUMENT value, so computing it by explode +
   * shuffle + groupBy (as the relational form must) pays a corpus-sized
   * shuffle for nothing; this expression is a zero-shuffle codegen'd
-  * map. The exploded-shingle path still exists where it is genuinely
-  * needed: d04's verify join consumes the shingle frame itself.
+  * map.
   */
 object MinHashSig {
 
-  private val mod60 = 1152921504606846976L // 2^60
-
-  private val md5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  private val hex = "0123456789abcdef".toCharArray
-
   def compute(text: UTF8String, n: Int, seeds: Int): ArrayData = {
-    val shingles = WordShingles.compute(text, n)
-    val count = shingles.numElements()
-    if (count == 0) return null
-    val mins = Array.fill(seeds)(Long.MaxValue)
-    val digest = md5.get()
-    val hexChars = new Array[Char](32)
-    var s = 0
-    while (s < count) {
-      digest.reset()
-      val d = digest.digest(shingles.getUTF8String(s).getBytes)
-      var i = 0
-      while (i < 16) {
-        hexChars(2 * i) = hex((d(i) >> 4) & 0xf)
-        hexChars(2 * i + 1) = hex(d(i) & 0xf)
-        i += 1
-      }
-      // h1 = hex chars [0,15), h2 = [16,31) — 60 bits each, exactly the
-      // SQL CAST('0x' || substr(md5(sh), {1|17}, 15) AS BIGINT)
-      val h1 = java.lang.Long.parseLong(new String(hexChars, 0, 15), 16)
-      val h2 = java.lang.Long.parseLong(new String(hexChars, 16, 15), 16)
-      var k = 0
-      while (k < seeds) {
-        val v = (h1 + k * h2) % mod60 // < 2^60 + 7*2^60 < 2^63: no overflow
-        if (v < mins(k)) mins(k) = v
-        k += 1
-      }
-      s += 1
-    }
-    new GenericArrayData(mins.map(Long.box))
+    val hs = ShingleSketch.digests(text, n)
+    if (hs == null) null
+    else UnsafeArrayData.fromPrimitiveArray(ShingleSketch.signature(hs, hs.length / 2, seeds))
   }
 
   def min_hash_sig(c: Column, n: Int, seeds: Int): Column =

@@ -1,9 +1,13 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.api.Dedup
+import graft.api.{Checkpoints, Dedup}
+import graft.expr.ShingleSketch
 
 /** The public dedup API on synthetic corpora with KNOWN duplicate
   * structure — exact, near (one-word edit), and unrelated docs.
@@ -567,6 +571,188 @@ class DedupApiSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getInt(3))).toMap
     ps.zipWithIndex.foreach { case ((x, y), i) =>
       assert(got(2L * i) == lev(x, y), s"'$x' vs '$y'")
+    }
+  }
+
+  // ---- pair-grain verify: equivalence, job budget, session independence ----
+
+  private val base = "the quick brown fox jumps over the lazy dog near the river bank today"
+  private val promo = "click here to subscribe now"
+
+  /** Exact-copy families, one- and two-word edits, a superset and a
+    * prefix of the base text, boilerplate shared by several texts, and
+    * documents without shingles (null, empty, one and two tokens).
+    */
+  private val mixedDocs: Seq[(Long, String)] = Seq(
+    1L -> base, 2L -> base, 3L -> base,
+    4L -> base.replace("dog", "cat"), 6L -> base.replace("dog", "cat"),
+    5L -> base.replace("dog", "cat").replace("river", "lake"),
+    7L -> s"$base and then it went home to sleep in a warm bed by the fire",
+    8L -> s"another unrelated document mentioning window functions $promo",
+    9L -> s"another unrelated document mentioning window functions $promo",
+    10L -> "the quick brown fox jumps over the lazy",
+    11L -> null, 12L -> "hello world", 13L -> "x", 14L -> "",
+    15L -> "completely different content about spark query engines and shuffles",
+    16L -> s"window functions and broadcast joins $promo",
+    17L -> s"spark shuffles are expensive $promo")
+
+  private def mixed(s: SparkSession): DataFrame =
+    s.createDataFrame(mixedDocs).toDF("doc_id", "text")
+
+  private def shingleSet(text: String): Set[String] =
+    if (text == null) Set.empty
+    else text.split(" ", -1).sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet
+
+  /** The 8-seed signature of a shingle set through the hex form of md5. */
+  private def signature(set: Set[String]): Seq[Long] = {
+    val halves = set.toSeq.map { sh =>
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(sh.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      (java.lang.Long.parseLong(hex.substring(0, 15), 16),
+        java.lang.Long.parseLong(hex.substring(16, 31), 16))
+    }
+    (0 until 8).map(i => halves.map { case (h1, h2) => (h1 + i * h2) % (1L << 60) }.min)
+  }
+
+  /** Brute force over every id-ordered pair: (a, b, common, na, nb) for
+    * the pairs whose capped sets are non-empty and share a 2-hash band.
+    * `df` counts each shingle once per text in `dfTexts`.
+    */
+  private def brutePairs(cap: Option[Long], dfTexts: Seq[String])
+      : Seq[(Long, Long, Int, Int, Int)] = {
+    val df = dfTexts.flatMap(shingleSet).groupBy(identity).map { case (k, v) => k -> v.size }
+    val sets = mixedDocs.map { case (id, t) =>
+      id -> cap.fold(shingleSet(t))(c => shingleSet(t).filter(df(_) <= c))
+    }.filter(_._2.nonEmpty)
+    val sigs = sets.map { case (id, set) => id -> signature(set) }.toMap
+    for {
+      (a, sa) <- sets; (b, sb) <- sets if a < b
+      if sigs(a).grouped(2).zip(sigs(b).grouped(2)).exists { case (x, y) => x == y }
+    } yield (a, b, (sa intersect sb).size, sa.size, sb.size)
+  }
+
+  private def jaccard(c: Int, na: Int, nb: Int): Double = c.toDouble / (na + nb - c)
+
+  test("nearDupPairs and containmentPairs equal brute-force shingle-set jaccard/containment") {
+    val docs = mixed(spark)
+    for (cap <- Seq(None, Some(2L)); t <- Seq(0.0, 0.5, 0.9)) {
+      // nearDupPairs counts a shingle's frequency over distinct texts
+      val near = brutePairs(cap, mixedDocs.map(_._2).distinct)
+        .map { case (a, b, c, na, nb) => (a, b, jaccard(c, na, nb)) }
+        .filter(_._3 >= t).toSet
+      val gotNear = Dedup.nearDupPairs(docs, threshold = t, maxShingleFreq = cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      assert(gotNear.length == gotNear.toSet.size, s"duplicate rows, cap=$cap t=$t")
+      assert(gotNear.toSet == near, s"nearDupPairs cap=$cap t=$t")
+      // containmentPairs counts it over every row
+      val cont = brutePairs(cap, mixedDocs.map(_._2))
+        .map { case (a, b, c, na, nb) =>
+          (a, b, c.toDouble / math.min(na, nb), jaccard(c, na, nb)) }
+        .filter(_._3 >= t).toSet
+      val gotCont = Dedup.containmentPairs(docs, threshold = t, maxShingleFreq = cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
+      assert(gotCont.toSet == cont && gotCont.length == cont.size,
+        s"containmentPairs cap=$cap t=$t")
+    }
+    // the corpus exercises what it is meant to: exact families, the
+    // boilerplate cap, and a contained prefix below the jaccard bar
+    val all = brutePairs(None, mixedDocs.map(_._2).distinct)
+    assert(all.exists(p => (p._1, p._2) == ((1L, 2L))))
+    assert(brutePairs(Some(2L), mixedDocs.map(_._2).distinct).size < all.size)
+    assert(all.exists { case (a, b, c, na, nb) =>
+      (a, b) == ((3L, 10L)) && c == math.min(na, nb) && jaccard(c, na, nb) < 0.9 })
+  }
+
+  test("shingle sketch: signatures equal the relational form; hashes re-derive them") {
+    val docs = mixed(spark)
+    val relational = Dedup.minhashSignaturesRelational(docs).collect()
+      .map(r => r.getLong(0) -> (1 to 8).map(r.getLong)).toMap
+    val sk = docs.select(col("doc_id"),
+        ShingleSketch.shingle_sketch(col("text"), 3, 8).as("sk"))
+      .collect().map(r => r.getLong(0) -> Option(r.getStruct(1))).toMap
+    assert(sk.collect { case (id, Some(_)) => id }.toSet == relational.keySet)
+    for ((id, Some(row)) <- sk) {
+      val mh = row.getSeq[Long](0)
+      val hs = row.getSeq[Long](1)
+      assert(mh == relational(id), s"doc $id signature")
+      assert(mh == signature(shingleSet(mixedDocs.toMap.apply(id))), s"doc $id hex form")
+      assert(hs.length == 2 * shingleSet(mixedDocs.toMap.apply(id)).size)
+      // the same digests, unordered, give the same sketch
+      val pairs = hs.grouped(2).map(p => (p(0), p(1))).toSeq.reverse
+      val again = Seq(Tuple1(pairs)).toDF("p")
+        .select(ShingleSketch.hash_sketch(col("p"), 8).as("sk")).head().getStruct(0)
+      assert(again.getSeq[Long](0) == mh && again.getSeq[Long](1) == hs, s"doc $id")
+    }
+  }
+
+  /** Jobs `body` starts on `s`'s context, counted by job group so that
+    * concurrent suites do not count.
+    */
+  private def jobsOf[T](s: SparkSession)(body: => T): (T, Int) = {
+    val sc = s.sparkContext
+    val group = s"job-budget-${java.util.UUID.randomUUID}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job budget")
+    try {
+      val r = body
+      GraftSqlBridge.flushListenerBus(sc)
+      (r, n.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("job budget: nearDupPairs runs one cut at call time, nearDupClusters one collect") {
+    val docs = mixed(spark)
+    val (_, cutJobs) = jobsOf(spark)(Checkpoints.cut(
+      docs.groupBy(md5(col("text"))).agg(min(col("doc_id")), count(lit(1)),
+        min(col("text")))))
+    val (pairs, pairJobs) = jobsOf(spark)(Dedup.nearDupPairs(docs))
+    assert(pairJobs <= cutJobs, s"nearDupPairs ran $pairJobs jobs, one cut runs $cutJobs")
+    val edges = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.toDF("doc_a", "doc_b")
+    val (clusters, clusterJobs) = jobsOf(spark)(Dedup.nearDupClusters(edges))
+    assert(clusterJobs <= 2, s"nearDupClusters ran $clusterJobs jobs")
+    def rows(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val got = rows(clusters)
+    assert(got.map(_._1) == edges.collect().flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet)
+    assert(got.contains((3L, 1L, got.count(_._2 == 1L).toLong)), got.toString)
+    assert(got == rows(Dedup.nearDupClusters(edges, smallCutoff = 0L)))
+  }
+
+  test("nearDupClusters keeps the input id type on both paths") {
+    val pairs = Seq((1, 2), (2, 3), (7, 9), (10, 9)).toDF("doc_a", "doc_b")
+    for (cutoff <- Seq(0L, 1000L)) {
+      val out = Dedup.nearDupClusters(pairs, smallCutoff = cutoff)
+      assert(out.schema("doc_id").dataType == IntegerType, s"cutoff $cutoff")
+      assert(out.schema("cluster_id").dataType == IntegerType, s"cutoff $cutoff")
+      assert(out.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet ==
+        Set((1, 1, 3L), (2, 1, 3L), (3, 1, 3L), (7, 7, 3L), (9, 7, 3L), (10, 7, 3L)))
+    }
+  }
+
+  test("the pair and cluster functions give the same rows with ANSI on") {
+    def bag(df: DataFrame): Map[Seq[Any], Int] =
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
+    def runs(s: SparkSession): Seq[DataFrame] = {
+      val docs = mixed(s)
+      val pairs = Dedup.nearDupPairs(docs, threshold = 0.3)
+      Seq(pairs,
+        Dedup.nearDupPairs(docs, threshold = 0.3, maxShingleFreq = Some(2L)),
+        Dedup.containmentPairs(docs, threshold = 0.5),
+        Dedup.containmentPairs(docs, threshold = 0.5, maxShingleFreq = Some(2L)),
+        Dedup.nearDupClusters(pairs),
+        Dedup.nearDupClusters(pairs, smallCutoff = 0L))
+    }
+    for (((plain, ansi), i) <- runs(spark).zip(runs(TestSpark.ansi)).zipWithIndex) {
+      assert(bag(plain).nonEmpty, s"run $i is empty")
+      assert(bag(ansi) == bag(plain), s"run $i")
     }
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,6 +33,9 @@ class ReferenceQueriesSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private def fileScans(p: SparkPlan): Int =
     collectWithSubqueries(p) { case s: FileSourceScanExec => s }.size
+
+  private def joins(p: SparkPlan): Int =
+    collectWithSubqueries(p) { case j: BaseJoinExec => j }.size
 
   /** The three raw fixture tables written under a fresh temp dir. */
   private def withRawTables(body: String => Unit): Unit = {
@@ -73,12 +77,14 @@ class ReferenceQueriesSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
       val now = ReferenceQueries.cleaned(spark, dir)
       val expected = fresh(spark, dir)
-      for ((name, (got, want)) <- Seq("pin", "geo", "user").zip(now.all.zip(expected.all))) {
+      val names = Seq("pin", "geo", "user", "pin⋈geo", "pin⋈user")
+      for ((name, (got, want)) <- names.zip(now.all.zip(expected.all))) {
         assert(fileScans(want.queryExecution.executedPlan) > 0,
           s"$name: the reference pipeline must read the files")
         assert(bag(got) == bag(want), s"$name after the rewrite")
       }
       assert(bag(now.user) != before(2), "the user frame must see the rewrite")
+      assert(bag(now.pinUser) != before(4), "the pin⋈user frame must see the rewrite")
       assert(!(now eq old), "a changed input must not serve the old frames")
       assert(old.all.forall(_.storageLevel == StorageLevel.NONE),
         old.all.map(_.storageLevel).mkString(", "))
@@ -109,6 +115,10 @@ class ReferenceQueriesSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(bag(q.fn(spark, "")) == want)
     assert(ReferenceQueries.cleaned(spark, FixtureTables.dir) eq frames)
     assert(cached(frames), frames.all.map(_.storageLevel).mkString(", "))
+    // the re-persisted joins serve the next join query from memory
+    val q1 = ReferenceQueries.qr1.fn(spark, "")
+    q1.collect()
+    assert(joins(q1.queryExecution.executedPlan) == 0, q1.queryExecution.executedPlan.toString)
   }
 
   test("warm shared frames: no reference query plan scans a file") {
@@ -117,6 +127,7 @@ class ReferenceQueriesSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       df.collect()
       val p = df.queryExecution.executedPlan
       assert(fileScans(p) == 0, s"${q.name} re-reads raw parquet:\n$p")
+      assert(joins(p) == 0, s"${q.name} joins outside the shared frames:\n$p")
       assert(collectWithSubqueries(p) { case s: InMemoryTableScanExec => s }.nonEmpty,
         s"${q.name} does not read the shared frames:\n$p")
     }
