@@ -693,8 +693,7 @@ object Dedup {
     collectEdges(edges, idType, smallCutoff) match {
       case Some(e) =>
         val (nodes, roots) = unionFind(e)
-        val size = scala.collection.mutable.HashMap.empty[Long, Long]
-        roots.foreach(r => size(r) = size.getOrElse(r, 0L) + 1)
+        val size = roots.groupMapReduce(identity)(_ => 1L)(_ + _)
         val sess = pairs.sparkSession
         import sess.implicits._
         nodes.indices.map(i => (nodes(i), roots(i), size(roots(i))))

@@ -4,8 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -218,21 +217,11 @@ case class ShingleSketchExpr(child: Expression, n: Int, seeds: Int)
   override protected def nullSafeEval(input: Any): Any =
     ShingleSketch.compute(input.asInstanceOf[UTF8String], n, seeds)
 
-  // not nullSafeCodeGen: the result is null for non-null input with <n
-  // tokens, so the null flag is re-derived from the computed value
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val javaType = CodeGenerator.javaType(dataType)
-    ev.copy(code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = true;
-        $javaType ${ev.value} = null;
-        if (!${childGen.isNull}) {
-          ${ev.value} = graft.expr.ShingleSketch.compute(${childGen.value}, $n, $seeds);
-          ${ev.isNull} = (${ev.value} == null);
-        }""")
-  }
+  // a non-null text with <n tokens gives null too, so the body sets the flag
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, t =>
+      s"""${ev.value} = graft.expr.ShingleSketch.compute($t, $n, $seeds);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): ShingleSketchExpr =
     copy(child = newChild)
@@ -257,19 +246,10 @@ case class HashSketchExpr(child: Expression, seeds: Int) extends UnaryExpression
   override protected def nullSafeEval(input: Any): Any =
     ShingleSketch.fromPairs(input.asInstanceOf[ArrayData], seeds)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val javaType = CodeGenerator.javaType(dataType)
-    ev.copy(code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = true;
-        $javaType ${ev.value} = null;
-        if (!${childGen.isNull}) {
-          ${ev.value} = graft.expr.ShingleSketch.fromPairs(${childGen.value}, $seeds);
-          ${ev.isNull} = (${ev.value} == null);
-        }""")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, p =>
+      s"""${ev.value} = graft.expr.ShingleSketch.fromPairs($p, $seeds);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): HashSketchExpr =
     copy(child = newChild)

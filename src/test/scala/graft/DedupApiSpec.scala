@@ -685,6 +685,33 @@ class DedupApiSpec extends AnyFunSuite {
     }
   }
 
+  test("sketch kernels: generated code compiles and equals interpreted evaluation") {
+    // Spark falls back to interpreted evaluation when generated code does
+    // not compile; these sessions turn that fallback off, then on alone
+    def run(conf: (String, String)*): Set[Seq[Any]] = {
+      val s = spark.newSession()
+      conf.foreach { case (k, v) => s.conf.set(k, v) }
+      val sk = mixed(s).select(col("doc_id").as("id"),
+          ShingleSketch.shingle_sketch(col("text"), 3, 8).as("sk"))
+        .filter(col("sk").isNotNull)
+      // x's digests as array<struct<hi, lo>>, the input hash_sketch takes
+      val hs = col("x.sk.hs")
+      val digests = transform(sequence(lit(0), (size(hs) / 2).cast("int") - 1),
+        i => struct(element_at(hs, i * 2 + 1), element_at(hs, i * 2 + 2)))
+      sk.as("x").crossJoin(sk.as("y"))
+        .select(col("x.id"), col("y.id"), col("x.sk"),
+          ShingleSketch.hash_sketch(digests, 8),
+          ShingleSketch.common_count(col("x.sk.hs"), col("y.sk.hs")))
+        .collect().map(_.toSeq).toSet
+    }
+    val generated = run("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val interpreted = run("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    assert(generated.size == 13 * 13)
+    assert(generated == interpreted)
+  }
+
   /** Jobs `body` starts on `s`'s context, counted by job group so that
     * concurrent suites do not count.
     */
